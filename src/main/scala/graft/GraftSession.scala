@@ -7,6 +7,14 @@ import org.apache.spark.sql.SparkSession
   * Settings chosen for the 100 TB design target (AQE on, skew-join
   * handling, shuffle partitions sized to cores in local mode — on a real
   * cluster AQE coalesces post-shuffle partitions anyway).
+  *
+  * Generated code is compiled once per JVM: the compiled-class cache
+  * holds the engine's working set (one DailyDriver lifecycle needs about
+  * 790 classes; Spark's default keeps 100), and whole-stage classes are
+  * not named by plan position, so an identical pipeline at another
+  * codegen stage id reuses its class. The cache size is a static conf,
+  * read once when Spark's code generator first loads: it only takes
+  * effect when this builder creates the JVM's SparkContext.
   */
 object GraftSession {
   def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
@@ -25,6 +33,8 @@ object GraftSession {
       // events.parquet carries INT64 TIMESTAMP(NANOS) — not a Spark-native
       // type; read as Long (ns since epoch) and convert explicitly.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
+      .config("spark.sql.codegen.useIdInClassName", "false")
 
   def get(): SparkSession = {
     val s = builder().getOrCreate()

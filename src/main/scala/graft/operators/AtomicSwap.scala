@@ -139,9 +139,15 @@ object AtomicSwap {
         s"${System.currentTimeMillis()}|$nonce")
       if (!acquired) {
         val observed = readRaw(p)
+        // a torn or empty lock ages by its file mtime: CREATE_NEW makes
+        // the file before it writes the body, so a contender can read a
+        // live holder's lock empty; vanished → stale by definition
         val ts = observed.flatMap(_.split('|').headOption)
           .flatMap(s => scala.util.Try(s.toLong).toOption)
-          .getOrElse(0L) // torn/vanished → stale by definition
+          .orElse(
+            try Some(fs.getFileStatus(p).getModificationTime)
+            catch { case _: java.io.IOException => None })
+          .getOrElse(0L)
         if (System.currentTimeMillis() - ts > lockStaleMs) {
           // Breakers are SERIALIZED through the break token ([[Lease
           // .acquire]]'s discipline — see its takeover comment): a

@@ -48,9 +48,12 @@ object DedupGroups {
     // Correct because contraction preserves connectivity, labels are
     // original vertex ids, a component's minimum m always survives as
     // its own label (all of m's neighbors exceed m), and duplicate or
-    // bidirectional input pairs only feed idempotent mins.
+    // bidirectional input pairs only feed idempotent mins. A pair with a
+    // null endpoint is no edge: it is dropped here, so every path below
+    // sees the same graph.
     val p = pairs
       .select(col(aCol).as("a"), col(bCol).as("b"))
+      .filter(col("a").isNotNull && col("b").isNotNull)
       .localCheckpoint()
     // RAW-pair driver gate (round 14, guide §1.5/§5): when the
     // checkpointed pair set itself is metadata-sized (the incremental

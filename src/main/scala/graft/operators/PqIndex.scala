@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -77,11 +76,6 @@ object PqIndex {
   private def cellsPath(path: String, v: Long) = Versioned.cellsPath(path, v)
   private def deltaPath(path: String, e: Long) = Versioned.deltaPath(path, e)
   private def quantPath(path: String, v: Long) = s"${quantDir(path)}/v=$v"
-
-  private def exists(spark: SparkSession, dir: String): Boolean = {
-    val p = new Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
 
   def currentVersion(spark: SparkSession, path: String): Long =
     Versioned.currentVersion(spark, path)

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -78,14 +77,6 @@ object VecIndex {
   private def cellsPath(path: String, v: Long) = Versioned.cellsPath(path, v)
   private def deltaPath(path: String, e: Long) = Versioned.deltaPath(path, e)
   private def centsPath(path: String, v: Long) = s"${centsDir(path)}/v=$v"
-
-  private def fs(spark: SparkSession, path: String): FileSystem =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def exists(spark: SparkSession, dir: String): Boolean = {
-    val p = new Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
 
   /** The published state: manifest version `v` (0 = never published),
     * cells version `base` (0 = none), delta epoch, centroids version

@@ -1596,7 +1596,6 @@ object DailyDriver {
                pqMaxCellShare: Double = 0.5,
                sigRelayShare: Double = 0.5): MaintainReport =
    Lease.withLease(spark, dir, "maintain") {
-    import org.apache.hadoop.fs.Path
     import graft.operators.{PqIndex, VecIndex}
     val vdir = vecIndexDir(dir)
     val pqdir = pqIndexDir(dir)
@@ -2073,7 +2072,7 @@ object DailyDriver {
               quantizer: Option[DataFrame] = None,
               gcGraceMs: Long = ReaderGraceMs): Unit =
    Lease.withLease(spark, dir, "reembed") {
-    import graft.operators.{KMeans, PqIndex, VecIndex}
+    import graft.operators.VecIndex
     val vdir = vecIndexDir(dir)
     val pqdir = pqIndexDir(dir)
     require(VecIndex.currentVersion(spark, vdir) > 0L,

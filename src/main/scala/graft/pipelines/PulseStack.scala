@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.sources.BinarySources
 import graft.operators.ProfileOps
-import graft.queries.QueryDsl._
 
 /** `pulsestack.py` §3.3/§2.9 analog: raw float32 stream → per-chunk
   * piecewise detrend (W7) → phase fold (A2) → profile.

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
 import graft.functions.TextFunctions._
-import SimilarityQ.{dotFold, sqlDotFold}
+import SimilarityQ.sqlDotFold
 
 /** Second batch of training-data curation operators: repetition-based
   * quality filtering (the Gopher/RefinedWeb rule family), fixed-size

@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
 import graft.functions.TextFunctions._
-import QueryDsl._
 
 /** Fuzzy-dedup + similarity-search operators for the training-data
   * pipeline: MinHash signatures, LSH banding with exact-Jaccard

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
 import graft.functions.TextFunctions._
-import QueryDsl._
 
 /** Text-analysis operators for the training-data pipeline: language ID,
   * quality scoring, token statistics, content fingerprinting + exact

@@ -61,21 +61,28 @@ class DedupGroupsSpec extends SparkSpecBase {
     // pair driver path; a gate between the raw count and the contracted
     // edge count forces the clique-contraction + driver union-find
     // path; gate 0 forces the distributed loop. All three must agree.
+    // The same graph again with pairs that have a null endpoint: they
+    // are no edges, so they change no path's result (vertex 900 appears
+    // only in such pairs).
     val rnd = new scala.util.Random(29)
     val edges = Seq.fill(600)((rnd.nextInt(200).toLong, rnd.nextInt(200).toLong))
       .filter { case (a, b) => a != b }
-    val pairs = edges.toDF("a", "b")
-    val raw = DedupGroups.canonicalize(pairs, "a", "b")
-      .as[(Long, Long)].collect().toMap
-    val contracted = DedupGroups.canonicalize(pairs, "a", "b",
-      driverEdgeGate = 300).as[(Long, Long)].collect().toMap
-    val loop = DedupGroups.canonicalize(pairs, "a", "b", driverEdgeGate = 0)
-      .as[(Long, Long)].collect().toMap
-    assert(raw == contracted)
-    assert(raw == loop)
+    val nullPairs = Seq((Some(7L), None), (None, Some(900L)), (None, None))
+    val graphs = Seq(edges.toDF("a", "b"),
+      (edges.map { case (a, b) => (Option(a), Option(b)) } ++ nullPairs).toDF("a", "b"))
     // the raw path must still cover EVERY doc appearing in a pair
     val verts = edges.flatMap(e => Seq(e._1, e._2)).toSet
-    assert(raw.keySet == verts)
+    graphs.foreach { pairs =>
+      val raw = DedupGroups.canonicalize(pairs, "a", "b")
+        .as[(Long, Long)].collect().toMap
+      val contracted = DedupGroups.canonicalize(pairs, "a", "b",
+        driverEdgeGate = 300).as[(Long, Long)].collect().toMap
+      val loop = DedupGroups.canonicalize(pairs, "a", "b", driverEdgeGate = 0)
+        .as[(Long, Long)].collect().toMap
+      assert(raw == contracted)
+      assert(raw == loop)
+      assert(raw.keySet == verts)
+    }
   }
 
   test("unionFindAll emits every vertex, roots mapped to themselves") {
