@@ -31,16 +31,39 @@ object Bench {
     loadavg1m > ncpus / 4.0 || passSkewMedian > 1.4
 
   /** Median of per-query max/min pass ratios; queries with a failed
-    * run (non-positive time) are excluded. 1.0 when nothing is
+    * run (+Inf, or a non-positive time) are excluded. 1.0 when nothing is
     * comparable. */
   def passSkewMedian(p1: Map[String, Double],
                      p2: Map[String, Double]): Double = {
     val ratios = p1.keySet.intersect(p2.keySet).toSeq
       .map(k => (p1(k), p2(k)))
-      .collect { case (a, b) if a > 0 && b > 0 => math.max(a, b) / math.min(a, b) }
+      .collect { case (a, b) if a > 0 && b > 0 && !a.isInfinity && !b.isInfinity =>
+        math.max(a, b) / math.min(a, b) }
       .sorted
     if (ratios.isEmpty) 1.0 else ratios(((ratios.size - 1) * 0.5).toInt)
   }
+
+  /** One timed run in seconds, or +Inf when `run` throws: a failed run
+    * never publishes its elapsed-until-exception time, so it can never
+    * become a query's best time. */
+  def timeRun(run: => Unit): Double = {
+    val t0 = System.nanoTime()
+    try { run; (System.nanoTime() - t0) / 1e9 }
+    catch { case _: Throwable => Double.PositiveInfinity }
+  }
+
+  /** Per-query best times, the failed queries and the battery total. A
+    * query with any failed (+Inf) run is failed: its best time is None
+    * (serialized as null) and the total leaves it out. */
+  def summarize(runs: Seq[(String, Seq[Double])])
+      : (Seq[(String, Option[Double])], Seq[String], Double) = {
+    val best = runs.map { case (n, rs) =>
+      n -> Some(rs.min).filter(_ => rs.forall(r => !r.isInfinity)) }
+    (best, best.collect { case (n, None) => n }, best.flatMap(_._2).sum)
+  }
+
+  /** A run time as JSON: a failed (+Inf) run is `null`. */
+  private def runJson(r: Double): String = if (r.isInfinity) "null" else r.toString
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -76,9 +99,7 @@ object Bench {
         // Each invocation measured standalone: no cached data carried
         // across queries or runs (intra-query .cache() still works).
         spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        name -> (System.nanoTime() - t0) / 1e9
+        name -> timeRun(fn(spark, sfDir).count())
       }.toMap
     val (p1, p2) = (pass(wanted), pass(wanted.reverse))
     // CONTAMINATION GUARD (round 10's lesson: a battery where q121 read
@@ -138,36 +159,24 @@ object Bench {
       flagged.map { name =>
         spark.catalog.clearCache()
         val fn = SparkEntry.queries(name)
-        val t0 = System.nanoTime()
-        // A solo rerun that FAILS must never publish its partial wall
-        // time: this path is the honesty backstop, and elapsed-until-
-        // exception entering runs.min would understate a flagged query —
-        // the exact lie the guard exists to prevent. Record +Inf so the
-        // failed run is visible in "runs" but can never become the min.
-        val t = try { fn(spark, sfDir).count()
-                      (System.nanoTime() - t0) / 1e9 }
-                catch { case _: Throwable => Double.PositiveInfinity }
-        name -> t
+        name -> timeRun(fn(spark, sfDir).count())
       }.toMap
-    val results = wanted.map { case (name, _) =>
-      val runs = Seq(p1(name), p2(name)) ++ solo.get(name)
-      (name, runs.min, runs)
+    val allRuns = wanted.map { case (name, _) =>
+      name -> (Seq(p1(name), p2(name)) ++ solo.get(name))
     }
-    val qs = results.map { case (k, v, _) => "\"" + k + "\":" + v }
+    val (bestTimes, failed, total) = summarize(allRuns)
+    val qs = bestTimes.map { case (k, v) => "\"" + k + "\":" + v.fold("null")(runJson) }
       .mkString("{", ",", "}")
-    val rawRuns = results.map { case (k, _, rs) =>
-      // Infinity (a failed solo rerun) is not valid JSON — serialize as
-      // null so the failure is visible but parseable.
-      "\"" + k + "\":" + rs.map(r =>
-        if (r.isInfinity) "null" else r.toString).mkString("[", ",", "]")
+    val rawRuns = allRuns.map { case (k, rs) =>
+      "\"" + k + "\":" + rs.map(runJson).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+    val failedJson = failed.map(n => "\"" + n + "\"").mkString("[", ",", "]")
     // Pass-skew summary: per-query max/min ratio across the two passes.
     // High skew = battery-POSITION tax (warmth, accumulated-JVM state),
     // not code — future rounds read this to tell a positional artifact
     // from a real regression without a solo rerun (the r6 q82 lesson).
-    val skews = results.collect {
-      case (name, best, rs) if best > 0 && rs.forall(r => r > 0 && !r.isInfinity) =>
+    val skews = allRuns.collect {
+      case (name, rs) if rs.forall(r => r > 0 && !r.isInfinity) =>
         name -> rs.max / rs.min
     }.sortBy(-_._2)
     val skewJson =
@@ -182,7 +191,7 @@ object Bench {
     val guardJson =
       s"""{"contaminated_window":$contaminated,"load1m":$load1m,""" +
         s""""ncpus":$ncpus,"pass_skew_median":$skewMedianPasses}"""
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"runs":$rawRuns,"pass_skew":$skewJson,"battery_guard":$guardJson,"solo_reruns":$soloJson,"loadavg_start":$loadStart,"loadavg_end":${loadavg()},"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"runs":$rawRuns,"pass_skew":$skewJson,"battery_guard":$guardJson,"solo_reruns":$soloJson,"failed":$failedJson,"loadavg_start":$loadStart,"loadavg_end":${loadavg()},"sf":"$sfDir"}"""
     // The driver parses the bench JSON from output where sbt may append its
     // own trailer lines; persist to a file AND print after spark.stop() so
     // the JSON is the program's last stdout line.

@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.DriverParquet
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -760,14 +761,14 @@ object ScaleCheck {
       val prevDir = s"target/scalecheck_prev/${d.replaceAll("[^A-Za-z0-9]", "_")}"
       Curation.curate(a, bench, cfg).select(cols.map(col): _*)
         .write.mode("overwrite").parquet(s"$prevDir/decisions")
-      val prevDecisions = spark.read.parquet(s"$prevDir/decisions")
+      val prevDecisions = DriverParquet.read(spark).load(s"$prevDir/decisions")
       graft.streaming.StreamOps.signatureIndex(
           a.join(prevDecisions.filter(col("quality_pass") && col("contam_pass"))
             .select("doc_id"), Seq("doc_id")))
         .write.mode("overwrite").parquet(s"$prevDir/sig_index")
       spark.catalog.clearCache()
-      val prev = spark.read.parquet(s"$prevDir/decisions")
-      val prevIndex = spark.read.parquet(s"$prevDir/sig_index")
+      val prev = DriverParquet.read(spark).load(s"$prevDir/decisions")
+      val prevIndex = DriverParquet.read(spark).load(s"$prevDir/sig_index")
       val t0 = System.nanoTime()
       // the DELTA form — what the daily driver actually materializes
       // and persists since the partition-grain publish (the full-table
@@ -842,7 +843,7 @@ object ScaleCheck {
         .repartition(32)
         .write.mode("overwrite").parquet(src)
     }
-    val base = spark.read.parquet(src)
+    val base = DriverParquet.read(spark).load(src)
     val vdir = "target/adc_vec"; val pqdir = "target/adc_pq"
     // guard on BOTH stores: an interrupted first run (vec published,
     // pq not — the quantizer training is the widest window) must

@@ -2,6 +2,7 @@ package graft.model
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import graft.operators.Cube
+import graft.sources.DriverParquet
 
 /** Typed surface of the cube data model (SURVEY.md §1.2: `Dataset[T]`
   * case classes for the operator library, `DataFrame` for the dynamic
@@ -43,6 +44,6 @@ object Model {
   def loadCube(spark: SparkSession, samplesPath: String,
                weightsPath: String): Cube =
     Cube(
-      spark.read.parquet(samplesPath).as[SampleRow].toDF(),
-      spark.read.parquet(weightsPath).as[WeightRow].toDF())
+      DriverParquet.read(spark).load(samplesPath).as[SampleRow].toDF(),
+      DriverParquet.read(spark).load(weightsPath).as[WeightRow].toDF())
 }

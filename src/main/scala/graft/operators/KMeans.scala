@@ -178,7 +178,8 @@ object KMeans {
     * cost q77 a third of its kernel win — one extra exchange + a
     * 32-task stage over rows that were parallel enough. Now the spread
     * applies only when the input is demonstrably narrow-and-skinny:
-    *  - a NARROW plan (scan/checkpoint + project/filter only) whose
+    *  - a NARROW plan (any leaf relation — V1 or V2 scan, checkpoint,
+    *    local rows — under project/filter only) whose
     *    partition count is below half the session parallelism gets the
     *    spread (the 1-2-partition small-file scan that single-threaded
     *    q92's fan-out in round 13 — and, at corpus scale, a scan
@@ -190,14 +191,12 @@ object KMeans {
     *    round 13 measured as the q134/q135 single-threading.
     * The partition probe runs ONLY on narrow plans, where building the
     * scan RDD is metadata work (file listing, no job). */
-  private def maybeSpread(vecs: DataFrame): DataFrame = {
+  private[operators] def maybeSpread(vecs: DataFrame): DataFrame = {
     val p = vecs.sparkSession.sessionState.conf.numShufflePartitions
     val narrow = vecs.queryExecution.optimizedPlan.find {
       case _: org.apache.spark.sql.catalyst.plans.logical.Project => false
       case _: org.apache.spark.sql.catalyst.plans.logical.Filter => false
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => false
-      case _: org.apache.spark.sql.execution.LogicalRDD => false
-      case _: org.apache.spark.sql.execution.datasources.LogicalRelation => false
+      case _: org.apache.spark.sql.catalyst.plans.logical.LeafNode => false
       case _ => true
     }.isEmpty
     if (narrow && vecs.rdd.getNumPartitions * 2 >= p) vecs

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.DriverParquet
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -135,8 +136,8 @@ object LexIndex {
     // Partition-column type inference reads tb back as int — filter
     // first (predicates over partition attrs prune regardless of the
     // literal widening), then pin long to match the written schema.
-    spark.read.option("basePath", bucketsDir(path))
-      .parquet(live.map(b => bucketPath(path, b, manifest(b))): _*)
+    DriverParquet.read(spark).option("basePath", bucketsDir(path))
+      .load(live.map(b => bucketPath(path, b, manifest(b))): _*)
       .filter(col("tb").isin(live: _*))
       .drop("v")
       .withColumn("tb", col("tb").cast("long"))
@@ -198,7 +199,7 @@ object LexIndex {
     // version only, never of the live index or the mutation's lineage),
     // versioned and published exactly like the buckets themselves.
     if (written.nonEmpty)
-      spark.read.option("basePath", dst).parquet(dst)
+      DriverParquet.read(spark).option("basePath", dst).load(dst)
         .select(col("doc_id"), col("tb"))
         // ONE exchange (round 14, guide §2.4): hash-cluster on tb, then
         // dedup in place — HashPartitioning(tb) satisfies the
@@ -230,7 +231,7 @@ object LexIndex {
     val f = fs(spark, path)
     val paths = manifest.toSeq.sorted.map { case (b, v) => docmapPath(path, b, v) }
     if (!paths.forall(p => f.exists(new Path(p)))) None
-    else Some(spark.read.option("basePath", docmapDir(path)).parquet(paths: _*)
+    else Some(DriverParquet.read(spark).option("basePath", docmapDir(path)).load(paths: _*)
       .select(col("doc_id"), col("tb").cast("long").as("tb")))
   }
 
@@ -301,7 +302,7 @@ object LexIndex {
   def stats(spark: SparkSession, path: String): DataFrame = {
     val v = currentVersion(spark, path)
     require(v > 0L, s"no published index under $path")
-    spark.read.parquet(s"${statsDir(path)}/v=$v")
+    DriverParquet.read(spark).load(s"${statsDir(path)}/v=$v")
   }
 
   /** Incremental maintenance: fold a DELTA tf relation (NEW documents
@@ -483,9 +484,9 @@ object LexIndex {
   private def readDeltaPaths(spark: SparkSession, dirs: Seq[String]): DataFrame = {
     // all dirs share one generation dir — its path is the basePath, so
     // only `b` surfaces as a partition column
-    val raw = spark.read
+    val raw = DriverParquet.read(spark)
       .option("basePath", new Path(dirs.head).getParent.toString)
-      .parquet(dirs: _*)
+      .load(dirs: _*)
       .select(col("term"), col("doc_id"), col("tf"), col("dl"),
         col("b").cast("long").as("b"))
     val first = raw.groupBy(col("doc_id")).agg(min(col("b")).as("b"))
@@ -933,7 +934,7 @@ object LexIndex {
     val dmPaths = live.map(b => docmapPath(path, b, man(b)))
     val pairs =
       if (dmPaths.forall(p => f.exists(new Path(p))))
-        spark.read.option("basePath", docmapDir(path)).parquet(dmPaths: _*)
+        DriverParquet.read(spark).option("basePath", docmapDir(path)).load(dmPaths: _*)
           .select(col("doc_id"))
       else readBuckets(spark, path, man, live).select(col("doc_id"))
     pairs.join(broadcast(ids.select(col("doc_id")).distinct()),
@@ -1298,7 +1299,7 @@ object LexIndex {
       * index would carry. Delta absent → the plain pinned read. */
     def stats: DataFrame = {
       require(version > 0L, s"no published index under $path")
-      val bulk = spark.read.parquet(s"${statsDir(path)}/v=$version")
+      val bulk = DriverParquet.read(spark).load(s"${statsDir(path)}/v=$version")
       deltaRows match {
         case None => bulk
         case Some(d) =>

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.DriverParquet
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -93,7 +94,7 @@ object PqIndex {
   private def quantAt(spark: SparkSession, path: String,
                       m: Versioned.Man): DataFrame = {
     require(m.cents > 0L, s"no quantizer published under $path — build first")
-    spark.read.parquet(quantPath(path, m.cents))
+    DriverParquet.read(spark).load(quantPath(path, m.cents))
   }
 
   /** The coarse centroid of `cell`, off the quantizer row's columns —
@@ -234,7 +235,7 @@ object PqIndex {
       if (Versioned.hasCells(spark, deltaPath(path, m.epoch)))
         // drop the stream lineage's per-micro-batch replay key (a no-op
         // on a batch-appended epoch, which has no b= level)
-        Some(spark.read.parquet(deltaPath(path, m.epoch)).drop("b"))
+        Some(DriverParquet.read(spark).load(deltaPath(path, m.epoch)).drop("b"))
       else None
     (bulk.toSeq ++ delta.toSeq).reduceOption(_.unionByName(_))
   }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.DriverParquet
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -490,12 +491,12 @@ object Snapshots {
             val base = revDir(root, ov, or)
             // basePath recovers `batch` as a partition column even
             // though only a SUBSET of the owner's batch dirs is read
-            spark.read.option("basePath", base)
-              .parquet(rs.map(b => s"$base/batch=${b.batch}").sorted: _*)
+            DriverParquet.read(spark).option("basePath", base)
+              .load(rs.map(b => s"$base/batch=${b.batch}").sorted: _*)
           }
           .reduce(_ unionByName _)
           .withColumn("batch", col("batch").cast(LongType))
-      case _ => spark.read.parquet(liveDataDir(f, root, v))
+      case _ => DriverParquet.read(spark).load(liveDataDir(f, root, v))
     }
   }
 
@@ -935,7 +936,7 @@ object Snapshots {
           s"from data revision r=${revs.last}, live is r=$live — a " +
           s"takedown redacted the version since): re-export before " +
           s"serving it to a trainer")
-    spark.read.parquet(shardRevDir(root, v, live))
+    DriverParquet.read(spark).load(shardRevDir(root, v, live))
   }
 
   /** True iff `v` has a shard export whose source data revision is
@@ -1020,7 +1021,7 @@ object Snapshots {
         // manifest itself (text is immutable under a seal, so a doc
         // absent from it carried no trainable chunks and its lang is
         // irrelevant: pack drops zero-token docs before the deal)
-        val langMap = spark.read.parquet(shardRevDir(root, v, revs.last))
+        val langMap = DriverParquet.read(spark).load(shardRevDir(root, v, revs.last))
           .select(col("doc_id"), col("lang")).distinct()
         val docsWithLang = docs.select(col("doc_id"), col("text"))
           .join(langMap, Seq("doc_id"), "left")
@@ -1107,7 +1108,7 @@ object Snapshots {
           // r=1 — the in-place upgrade; gc sweeps the superseded root
           // files under the grace afterwards
           val next = liveK.map(_ + 1L).getOrElse(1L)
-          val sealedRows = spark.read.parquet(liveDataDir(f, root, v))
+          val sealedRows = DriverParquet.read(spark).load(liveDataDir(f, root, v))
           if (!sealedRows.join(vIds, Seq(idCol), "left_semi").isEmpty) {
             sealedRows.join(vIds, Seq(idCol), "left_anti")
               .write.mode("overwrite").parquet(revDir(root, v, next))

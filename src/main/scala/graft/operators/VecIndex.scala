@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.DriverParquet
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -189,7 +190,7 @@ object VecIndex {
       if (Versioned.hasCells(spark, deltaPath(path, m.epoch)))
         // drop the stream lineage's per-micro-batch replay key (a no-op
         // on a batch-appended epoch, which has no b= level)
-        Some(spark.read.parquet(deltaPath(path, m.epoch)).drop("b"))
+        Some(DriverParquet.read(spark).load(deltaPath(path, m.epoch)).drop("b"))
       else None
     (bulk.toSeq ++ delta.toSeq).reduceOption(_.unionByName(_))
   }
@@ -215,7 +216,7 @@ object VecIndex {
   private def centsAt(spark: SparkSession, path: String,
                       m: Manifest): Option[DataFrame] =
     if (m.cents == 0L) None
-    else Some(spark.read.parquet(centsPath(path, m.cents))
+    else Some(DriverParquet.read(spark).load(centsPath(path, m.cents))
       .select(col("cid"), col("centroid")))
 
   /** A PINNED read view — [[LexIndex.Pinned]]'s vector sibling: the

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.DriverParquet
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -187,16 +188,16 @@ private[operators] object Versioned {
     else cellOwnersIfManifested(spark, path, base) match {
       case None =>
         if (hasCells(spark, cellsPath(path, base)))
-          Some(spark.read.option("basePath", cellsDir(path))
-            .parquet(cellsPath(path, base)).drop("v"))
+          Some(DriverParquet.read(spark).option("basePath", cellsDir(path))
+            .load(cellsPath(path, base)).drop("v"))
         else None
       case Some(owners) if owners.isEmpty => None
       case Some(owners) =>
         val leafs = owners.toSeq.sorted.map { case (c, o) =>
           s"${cellsPath(path, o)}/cid=$c"
         }
-        Some(spark.read.option("basePath", cellsDir(path))
-          .parquet(leafs: _*).drop("v"))
+        Some(DriverParquet.read(spark).option("basePath", cellsDir(path))
+          .load(leafs: _*).drop("v"))
     }
 
   /** Remove `ids` from a celled index, CELL-PRUNED: one column-pruned
@@ -235,7 +236,7 @@ private[operators] object Versioned {
     val bulk = openBulkResolved(spark, path, m.base)
     val delta =
       if (hasCells(spark, deltaPath(path, m.epoch)))
-        Some(spark.read.parquet(deltaPath(path, m.epoch)).drop("b"))
+        Some(DriverParquet.read(spark).load(deltaPath(path, m.epoch)).drop("b"))
       else None
     val all = (bulk.toSeq ++ delta.toSeq).reduceOption(_.unionByName(_))
       .getOrElse(throw new IllegalArgumentException(
@@ -379,8 +380,8 @@ private[operators] object Versioned {
       else f.listStatus(p).map(_.getPath)
         .filter(_.getName.startsWith("b="))
     if (bDirs.isEmpty) None
-    else Some(spark.read.option("basePath", dir)
-      .parquet(bDirs.map(_.toString).sorted: _*).select(col(idCol)))
+    else Some(DriverParquet.read(spark).option("basePath", dir)
+      .load(bDirs.map(_.toString).sorted: _*).select(col(idCol)))
   }
 
   /** Whether any of `ids` appears in an opened index — the
@@ -487,7 +488,7 @@ private[operators] object Versioned {
     val next = new Path(deltaPath(path, m.epoch + 1L))
     f.delete(next, true) // a torn predecessor's uncommitted debris
     if (hasCells(spark, dir.toString))
-      spark.read.parquet(dir.toString).drop("b")
+      DriverParquet.read(spark).load(dir.toString).drop("b")
         .write.partitionBy("cid").parquet(next.toString)
     publish(spark, path, m.v + 1L, m.base, m.epoch + 1L, m.cents)
     true

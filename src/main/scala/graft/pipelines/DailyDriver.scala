@@ -1,5 +1,6 @@
 package graft.pipelines
 
+import graft.sources.DriverParquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -104,19 +105,19 @@ object DailyDriver {
   private def openDecisionsBatched(spark: SparkSession, dir: String): DataFrame = {
     AtomicSwap.repair(spark, decisionsDir(dir))
     PartitionSwap.repair(spark, decisionsDir(dir))
-    batched(spark.read.parquet(decisionsDir(dir)))
+    batched(DriverParquet.read(spark).load(decisionsDir(dir)))
   }
 
   private def openSigIndexBatched(spark: SparkSession, dir: String): DataFrame = {
     AtomicSwap.repair(spark, indexDir(dir))
     PartitionSwap.repair(spark, indexDir(dir))
-    batched(spark.read.parquet(indexDir(dir)))
+    batched(DriverParquet.read(spark).load(indexDir(dir)))
   }
 
   private def openFpsBatched(spark: SparkSession, dir: String): DataFrame = {
     AtomicSwap.repair(spark, fpsDir(dir))
     PartitionSwap.repair(spark, fpsDir(dir))
-    batched(spark.read.parquet(fpsDir(dir)))
+    batched(DriverParquet.read(spark).load(fpsDir(dir)))
   }
 
   /** Whether `path` holds root-level parquet data files — a FLAT table
@@ -530,7 +531,7 @@ object DailyDriver {
     graft.operators.Snapshots.fingerprints(docs)
       .withColumn("batch", lit(0L))
       .write.partitionBy("batch").mode("overwrite").parquet(fpsDir(dir))
-    val decisions = spark.read.parquet(decisionsDir(dir))
+    val decisions = DriverParquet.read(spark).load(decisionsDir(dir))
     val cand = candidates(docs, decisions)
     graft.streaming.StreamOps.signatureIndex(cand)
       .withColumn("batch", lit(0L))
@@ -689,7 +690,7 @@ object DailyDriver {
     val fpsLanded = pathExists(spark, fpsDir(dir)) && {
       AtomicSwap.repair(spark, fpsDir(dir))
       PartitionSwap.repair(spark, fpsDir(dir))
-      !spark.read.parquet(fpsDir(dir))
+      !DriverParquet.read(spark).load(fpsDir(dir))
         .join(deltaIds, Seq("doc_id"), "left_semi").isEmpty
     }
     if (!fpsLanded) {
@@ -1165,7 +1166,7 @@ object DailyDriver {
     // under new micro-batch boundaries, so a doc can land in two mb=
     // partitions — day ids are unique by contract, so the dedup is
     // exact and delta-sized
-    val staged = spark.read.parquet(sd)
+    val staged = DriverParquet.read(spark).load(sd)
       .select(col("doc_id"), col("text"))
       .dropDuplicates("doc_id").localCheckpoint(true)
     require(!staged.isEmpty,
@@ -1412,10 +1413,10 @@ object DailyDriver {
   /** The chunk loop's live tables without the layout's `batch` column
     * (the per-step partition key that makes retries idempotent). */
   def openCleaned(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(cleanedDir(dir)).drop("batch")
+    DriverParquet.read(spark).load(cleanedDir(dir)).drop("batch")
 
   def openChunkIndex(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(chunkIndexDir(dir)).drop("batch")
+    DriverParquet.read(spark).load(chunkIndexDir(dir)).drop("batch")
 
   /** Day N: rewrite arrivals against the index; land their cleaned rows
     * and their new chunk hashes under the step's own `batch=minId`
@@ -1436,7 +1437,7 @@ object DailyDriver {
     require(!ids.isNullAt(0), "chunkStep needs a non-empty delta")
     val minId = ids.getLong(0)
     // prior = every batch but this step's own (a retry's first attempt)
-    val prior = spark.read.parquet(chunkIndexDir(dir))
+    val prior = DriverParquet.read(spark).load(chunkIndexDir(dir))
       .filter(col("batch") =!= minId).drop("batch")
     ChunkDedup.rewriteAgainst(newDocs, "doc_id", "text", prior, c)
       .withColumn("batch", lit(minId))
@@ -1449,7 +1450,7 @@ object DailyDriver {
       .write.partitionBy("batch").mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .parquet(chunkIndexDir(dir))
-    spark.read.parquet(cleanedDir(dir))
+    DriverParquet.read(spark).load(cleanedDir(dir))
       .filter(col("batch") === minId).drop("batch")
   }
 
@@ -1478,7 +1479,7 @@ object DailyDriver {
    Lease.withLease(spark, dir, "chunkForget") {
     val vIds = victims.select(col("doc_id")).distinct().localCheckpoint(true)
     // pin the partition column back to long — discovery infers int
-    val cleaned = spark.read.parquet(cleanedDir(dir))
+    val cleaned = DriverParquet.read(spark).load(cleanedDir(dir))
       .withColumn("batch", col("batch").cast("long"))
     val hit = cleaned.join(vIds, Seq("doc_id"), "left_semi")
       .select(col("batch")).distinct().collect().map(_.getLong(0))

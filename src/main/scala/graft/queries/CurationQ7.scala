@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType
 import graft.Tables
 import graft.functions.TextFunctions._
 import graft.operators.Bm25
+import graft.sources.DriverParquet
 
 /** Seventh batch — the round-6 depth items: INDEX-BACKED hybrid
   * retrieval (q121 — the fusion q113 demonstrates brute-force, run over
@@ -70,7 +71,7 @@ object CurationQ7 {
     val cents = emb.filter(col("vec_id") < idxCells)
       .select(col("vec_id").cast(IntegerType).as("cid"),
         col("embedding").as("centroid"))
-    fuseSearch(s, d, s"$root/lex", s.read.parquet(s"$root/df"),
+    fuseSearch(s, d, s"$root/lex", DriverParquet.read(s).load(s"$root/df"),
       LexIndex.stats(s, s"$root/lex").select(col("n_docs")),
       s"$root/vec", "vec_id", cents)
   }

@@ -47,4 +47,27 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(Bench.passSkewMedian(Map.empty, Map.empty) == 1.0)
     assert(Bench.passSkewMedian(Map("a" -> -1.0), Map("a" -> 1.0)) == 1.0)
   }
+
+  test("passSkewMedian: failed runs (+Inf) are excluded") {
+    val inf = Double.PositiveInfinity
+    assert(Bench.passSkewMedian(Map("a" -> 1.0, "b" -> inf), Map("a" -> 1.5, "b" -> 0.1)) == 1.5)
+  }
+
+  test("timeRun: a run that throws records +Inf, not its elapsed time") {
+    assert(Bench.timeRun(throw new IllegalStateException("boom")).isPosInfinity)
+    val t = Bench.timeRun(Thread.sleep(5))
+    assert(t >= 0.004 && t < 60.0)
+  }
+
+  test("summarize: a failed query is null, listed as failed and left out of the total") {
+    val inf = Double.PositiveInfinity
+    val (best, failed, total) = Bench.summarize(Seq(
+      "ok" -> Seq(2.0, 1.5),
+      "throws_once" -> Seq(inf, 0.2),
+      "throws" -> Seq(inf, inf, inf)))
+    assert(best == Seq("ok" -> Some(1.5), "throws_once" -> None, "throws" -> None))
+    assert(failed == Seq("throws_once", "throws"))
+    assert(total == 1.5)
+    assert(Bench.summarize(Nil) == ((Nil, Nil, 0.0)))
+  }
 }

@@ -104,4 +104,28 @@ class KMeansSpec extends SparkSpecBase {
     val a = KMeans.assign(withZero, "vec_id", "embedding", cents)
     assert(!a.select($"vec_id").as[Long].collect().contains(999L))
   }
+
+  test("maybeSpread: a DataSourceV2 scan is a narrow leaf like a V1 scan") {
+    import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+    val dir = tempDir("kmeans-v2-leaf")
+    spark.range(0, 400, 1, 4).select($"id".as("__id")).write.parquet(s"$dir/t")
+    def spreads(df: org.apache.spark.sql.DataFrame): Int =
+      KMeans.maybeSpread(df).queryExecution.optimizedPlan
+        .collect { case r: RepartitionByExpression => r }.size
+    val key = "spark.sql.sources.useV1SourceList"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, "")
+    try {
+      val v2 = spark.read.parquet(s"$dir/t")
+      assert(v2.queryExecution.optimizedPlan.collectLeaves()
+        .exists(_.isInstanceOf[DataSourceV2ScanRelation]))
+      val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
+      assert(v2.rdd.getNumPartitions * 2 >= p, "fixture scan is below half the parallelism")
+      assert(spreads(v2) == 0, "a parallel V2 scan was re-spread")
+      assert(spreads(v2.filter($"__id" > 3).select($"__id")) == 0)
+      // a wide plan over the same scan still gets the spread
+      assert(spreads(v2.groupBy($"__id").count()) == 1)
+    } finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
