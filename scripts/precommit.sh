@@ -14,4 +14,13 @@ if [ -n "$reads" ]; then
   echo "precommit: parquet read outside DriverParquet.read" >&2
   exit 1
 fi
+# JobCosts (graft.obs) is the one SparkListener in the main sources;
+# a second hand-rolled listener drifts from it (README, "Diagnostics").
+listeners=$(grep -rnE 'addSparkListener|(extends|new) +([[:alnum:]_]+\.)*SparkListener\b' \
+              src/main/scala | grep -v '^src/main/scala/graft/obs/JobCosts.scala:' || true)
+if [ -n "$listeners" ]; then
+  echo "$listeners"
+  echo "precommit: SparkListener outside graft.obs.JobCosts" >&2
+  exit 1
+fi
 sbt -batch compile Test/compile

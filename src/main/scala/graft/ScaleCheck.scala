@@ -467,25 +467,8 @@ object ScaleCheck {
           import scala.jdk.CollectionConverters._
           def gcMs(): Long = ManagementFactory.getGarbageCollectorMXBeans
             .asScala.map(_.getCollectionTime).sum
-          val tasks = new java.util.concurrent.atomic.AtomicLong
-          val taskMs = new java.util.concurrent.atomic.AtomicLong
-          val jobs = new java.util.concurrent.atomic.AtomicLong
-          val diag = new org.apache.spark.scheduler.SparkListener {
-            override def onTaskEnd(
-                te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-              tasks.incrementAndGet()
-              Option(te.taskMetrics)
-                .foreach(m => taskMs.addAndGet(m.executorRunTime))
-              ()
-            }
-            override def onJobStart(
-                js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-              jobs.incrementAndGet(); ()
-            }
-          }
-          spark.sparkContext.addSparkListener(diag)
           val gc0 = gcMs()
-          try {
+          val (_, feedJobs) = graft.obs.JobCosts.during(spark) {
             rows.grouped(math.max(1, rows.length / 3 + 1)).zipWithIndex
               .foreach { case (g, gi) =>
                 input.addData(g.zipWithIndex.map { case ((id, t), j) =>
@@ -494,7 +477,7 @@ object ScaleCheck {
                 h.all.foreach(_.processAllAvailable())
               }
             h.stopAll()
-          } finally spark.sparkContext.removeSparkListener(diag)
+          }
           val t2s = System.nanoTime()
           val gcFeed = (gcMs() - gc0) / 1e3
           val feedWall = (t2s - t1s) / 1e9
@@ -503,8 +486,8 @@ object ScaleCheck {
           // compute floor and inflate the driver-overhead column this
           // diagnostic exists to isolate)
           val cores = spark.sparkContext.defaultParallelism
-          val taskPar = taskMs.get / 1e3 / cores
-          println(f"  [feed diag: jobs ${jobs.get}%d tasks ${tasks.get}%d " +
+          val taskPar = feedJobs.map(_.runMs).sum / 1e3 / cores
+          println(f"  [feed diag: jobs ${feedJobs.size}%d tasks ${feedJobs.map(_.tasks).sum}%d " +
             f"taskTime/cores $taskPar%.1f gc $gcFeed%.1f " +
             f"driverOverhead ${math.max(0.0, feedWall - taskPar - gcFeed)}%.1f " +
             f"of $feedWall%.1f s]")

@@ -53,9 +53,6 @@ object AtomicSwap {
   private def markerPath(dst: String) = new Path(dst + "__commit")
   private def lockPath(dst: String) = new Path(dst + "__lock")
 
-  private def fsOf(spark: SparkSession, p: Path): FileSystem =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** Replace `dst` with whatever `write` puts under the temp directory,
     * atomically under crashes. `write` receives the temp path and must
     * fully materialize the replacement there (e.g.
@@ -292,9 +289,6 @@ object Lease {
       try fs.delete(p, false) catch { case _: java.io.IOException => () }
     }
   }
-
-  private def fsOf(spark: SparkSession, p: Path): FileSystem =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Raw content read, scheme-aware: `file:` goes through NIO so the
     * lease layer NEVER reads via ChecksumFileSystem — its NIO-created

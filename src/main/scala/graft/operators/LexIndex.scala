@@ -67,14 +67,11 @@ object LexIndex {
   private def tb(term: Column): Column =
     pmod(graft.functions.TextFunctions.strHash(term), lit(Buckets))
 
-  private def fs(spark: SparkSession, path: String): FileSystem =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** The published version the index currently reads at (0 = no
     * successful build yet). */
   def currentVersion(spark: SparkSession, path: String): Long = {
     val dir = new Path(manifestDir(path))
-    val f = fs(spark, path)
+    val f = fsOf(spark, new Path(path))
     if (!f.exists(dir)) 0L
     else f.listStatus(dir).map(_.getPath.getName)
       .collect { case ManifestName(v) => v.toLong }
@@ -87,7 +84,7 @@ object LexIndex {
     * rows. Empty map = empty index (a build over zero documents). */
   private def readManifest(spark: SparkSession, path: String, v: Long): Map[Long, Long] = {
     if (v == 0L) return Map.empty
-    val in = fs(spark, path).open(new Path(manifestDir(path), s"v=$v.txt"))
+    val in = fsOf(spark, new Path(path)).open(new Path(manifestDir(path), s"v=$v.txt"))
     try {
       scala.io.Source.fromInputStream(in, "UTF-8").getLines()
         .filter(_.nonEmpty)
@@ -103,7 +100,7 @@ object LexIndex {
     * same-directory move, the only step that changes what readers see. */
   private def publishManifest(spark: SparkSession, path: String, v: Long,
                               entries: Map[Long, Long]): Unit = {
-    val f = fs(spark, path)
+    val f = fsOf(spark, new Path(path))
     val dir = new Path(manifestDir(path))
     f.mkdirs(dir)
     val tmp = new Path(dir, s".tmp-v=$v.txt")
@@ -189,7 +186,7 @@ object LexIndex {
     // cheap driver-side listing (≤ Buckets dirs): which buckets the
     // write actually produced — a bucket whose rows all vanished in a
     // delete writes nothing and must leave the manifest
-    val f = fs(spark, path)
+    val f = fsOf(spark, new Path(path))
     val written = f.listStatus(new Path(dst)).map(_.getPath.getName)
       .collect { case s if s.startsWith("tb=") => s.stripPrefix("tb=").toLong }
     // doc→bucket SIDECAR for the version's buckets: one (doc_id, tb)
@@ -228,7 +225,7 @@ object LexIndex {
   private[graft] def openDocmap(spark: SparkSession, path: String,
                                 manifest: Map[Long, Long]): Option[DataFrame] = {
     if (manifest.isEmpty) return None
-    val f = fs(spark, path)
+    val f = fsOf(spark, new Path(path))
     val paths = manifest.toSeq.sorted.map { case (b, v) => docmapPath(path, b, v) }
     if (!paths.forall(p => f.exists(new Path(p)))) None
     else Some(DriverParquet.read(spark).option("basePath", docmapDir(path)).load(paths: _*)
@@ -415,7 +412,7 @@ object LexIndex {
   private val DeltaBatchDirName = "b=(\\d+)".r
 
   private[graft] def deltaGen(spark: SparkSession, path: String): Long =
-    deltaGenStatus(fs(spark, path), path).map(_._1).getOrElse(0L)
+    deltaGenStatus(fsOf(spark, new Path(path)), path).map(_._1).getOrElse(0L)
 
   /** (generation, marker mtime) of the newest marker — the mtime is the
     * RETIREMENT instant of everything below it, gc's supersession
@@ -447,7 +444,7 @@ object LexIndex {
     * a live un-reconciled day from search and from [[delete]]'s
     * guard. */
   private[graft] def deltaBatchPaths(spark: SparkSession, path: String): Seq[String] = {
-    val f = fs(spark, path)
+    val f = fsOf(spark, new Path(path))
     val root = new Path(deltaDir(path))
     if (f.exists(root))
       require(!f.listStatus(root).exists(_.getPath.getName.startsWith("b=")),
@@ -542,7 +539,7 @@ object LexIndex {
   /** True when the CURRENT delta generation was opened by a mid-stream
     * fold — [[graft.pipelines.DailyDriver.stepStream]]'s start guard. */
   private[graft] def hasLiveFoldMarker(spark: SparkSession, path: String): Boolean = {
-    val f = fs(spark, path)
+    val f = fsOf(spark, new Path(path))
     val dir = new Path(deltaDir(path))
     f.exists(dir) && {
       val cur = deltaGen(spark, path)
@@ -584,7 +581,7 @@ object LexIndex {
     * the memoized bulk sum. */
   private def deltaShareOf(spark: SparkSession, path: String,
                            g: Long): (Long, Double) = {
-    val f = fs(spark, path)
+    val f = fsOf(spark, new Path(path))
     val dp = new Path(deltaGenDir(path, g))
     val delta = if (f.exists(dp)) f.getContentSummary(dp).getLength else 0L
     if (delta == 0L) return (0L, 0.0)
@@ -689,7 +686,7 @@ object LexIndex {
             presentIds(spark, path, rows.select(col("doc_id")).distinct()),
             Seq("doc_id"), "left_anti")
             .localCheckpoint(true)
-          val f = fs(spark, path)
+          val f = fsOf(spark, new Path(path))
           def markAndBump(): Unit = {
             val mk = new Path(deltaDir(path), s"_folded-${gen + 1L}")
             if (!f.exists(mk)) Lease.tryCreate(f, mk, s"${gen + 1L}\n")
@@ -760,7 +757,7 @@ object LexIndex {
     * lease (one lease file per store — nested acquisition would
     * deadlock; [[rebuild]] retires the delta inside its own lease). */
   private def clearStreamDeltaLocked(spark: SparkSession, path: String): Unit = {
-    val f = fs(spark, path)
+    val f = fsOf(spark, new Path(path))
     val g1 = deltaGen(spark, path) + 1L
     bumpDeltaGen(f, path, g1)
     // a retirement clears every fold marker at or below the new
@@ -930,7 +927,7 @@ object LexIndex {
     val man = readManifest(spark, path, cur)
     val live = touched.filter(man.contains).sorted
     if (live.isEmpty) return 0L
-    val f = fs(spark, path)
+    val f = fsOf(spark, new Path(path))
     val dmPaths = live.map(b => docmapPath(path, b, man(b)))
     val pairs =
       if (dmPaths.forall(p => f.exists(new Path(p))))
@@ -1130,7 +1127,7 @@ object LexIndex {
     val cur = currentVersion(spark, path)
     if (cur <= 0L) return
     val man = readManifest(spark, path, cur)
-    val f = fs(spark, path)
+    val f = fsOf(spark, new Path(path))
     val now = System.currentTimeMillis()
     val supersededBound = manifestMtime(f, path, cur, now)
     def aged(st: org.apache.hadoop.fs.FileStatus): Boolean =
@@ -1206,7 +1203,7 @@ object LexIndex {
                    graceMs: Long = 0L): Double = {
     val cur = currentVersion(spark, path)
     val man = readManifest(spark, path, cur)
-    val f = fs(spark, path)
+    val f = fsOf(spark, new Path(path))
     val root = new Path(bucketsDir(path))
     if (!f.exists(root)) return 0.0
     val now = System.currentTimeMillis()

@@ -49,9 +49,6 @@ object PartitionSwap {
   private def stagePath(dst: String) = new Path(dst + "__stage")
   private def markerPath(dst: String) = new Path(dst + "__pcommit")
 
-  private def fsOf(spark: SparkSession, p: Path): FileSystem =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** Replace the partitions `write` stages (every `<key>=<value>` dir
     * it leaves under the stage path) and delete the partitions named
     * by `drop`, atomically under crashes. `write` receives the stage

@@ -71,9 +71,6 @@ object Snapshots {
   private def sealFile(root: String, v: Long) =
     new Path(sealRoot(root), s"v=$v.txt")
 
-  private def fsOf(spark: SparkSession, p: String): FileSystem =
-    new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** The content fingerprint a snapshot seals per document — the
     * engine's portable polynomial hash ([[graft.functions.TextFunctions
     * .strHash]]), so [[verify]]'s "is the corpus the run saw still the
@@ -95,7 +92,7 @@ object Snapshots {
     * unsealed `snap/` dir is a crashed create, invisible here. */
   def versions(spark: SparkSession, root: String): Seq[Long] = {
     val dir = new Path(sealRoot(root))
-    val f = fsOf(spark, root)
+    val f = fsOf(spark, new Path(root))
     if (!f.exists(dir)) Seq.empty
     else f.listStatus(dir).map(_.getPath.getName)
       .collect { case SealName(v) => v.toLong }.sorted.toSeq
@@ -161,7 +158,7 @@ object Snapshots {
   private def publishRevision(spark: SparkSession, root: String, v: Long,
                               k: Long, tag: String): Unit =
     publishRevisionCounted(spark, root, v, k, tag,
-      footerRowsDeep(fsOf(spark, root), new Path(revDir(root, v, k)),
+      footerRowsDeep(fsOf(spark, new Path(root)), new Path(revDir(root, v, k)),
         spark.sparkContext.hadoopConfiguration))
 
   /** [[publishRevision]] with the row count supplied by the caller —
@@ -170,7 +167,7 @@ object Snapshots {
   private def publishRevisionCounted(spark: SparkSession, root: String,
                                      v: Long, k: Long, tag: String,
                                      n: Long): Unit = {
-    val f = fsOf(spark, root)
+    val f = fsOf(spark, new Path(root))
     val tmp = new Path(snapDir(root, v), s".tmp-r=$k.ok")
     val out = f.create(tmp, true)
     try out.write(s"rows:$n\n$tag:${System.currentTimeMillis()}\n"
@@ -391,7 +388,7 @@ object Snapshots {
   def createIncremental(spark: SparkSession, root: String, rowsIn: DataFrame,
                         batchCol: String = "batch"): Long =
     Lease.withLease(spark, root, "snapshot-create") {
-      val f = fsOf(spark, root)
+      val f = fsOf(spark, new Path(root))
       require(rowsIn.columns.contains(batchCol),
         s"createIncremental needs the '$batchCol' column (the partition " +
           s"key unchanged batches are deduplicated on); use create for " +
@@ -451,7 +448,7 @@ object Snapshots {
     * creates cannot both allocate N. */
   def create(spark: SparkSession, root: String, rows: DataFrame): Long =
     Lease.withLease(spark, root, "snapshot-create") {
-      val f = fsOf(spark, root)
+      val f = fsOf(spark, new Path(root))
       val v = allocVersion(spark, f, root)
       // v is unsealed by construction, so anything under its dir is a
       // crashed create's debris (possibly the pre-revision loose-file
@@ -472,7 +469,7 @@ object Snapshots {
     * of the referenced owners' `batch=` dirs (one read per owner
     * version — owner count is bounded by the sealed-history length). */
   def open(spark: SparkSession, root: String, v: Long): DataFrame = {
-    val f = fsOf(spark, root)
+    val f = fsOf(spark, new Path(root))
     require(f.exists(sealFile(root, v)),
       s"snapshot v=$v at $root is not sealed")
     openLiveData(spark, f, root, v)
@@ -518,7 +515,7 @@ object Snapshots {
     * status readouts need no data scan and a takedown-redacted version
     * reports its post-redaction count, not the create-time one. */
   def sealedRows(spark: SparkSession, root: String, v: Long): Long = {
-    val f = fsOf(spark, root)
+    val f = fsOf(spark, new Path(root))
     require(f.exists(sealFile(root, v)),
       s"snapshot v=$v at $root is not sealed")
     legacySwapRepair(spark, f, root, v)
@@ -606,7 +603,7 @@ object Snapshots {
   def gc(spark: SparkSession, root: String, keep: Long => Boolean,
          graceMs: Long = 0L): Unit =
     Lease.withLease(spark, root, "snapshot-gc") {
-      val f = fsOf(spark, root)
+      val f = fsOf(spark, new Path(root))
       val now = System.currentTimeMillis()
       val sr = new Path(sealRoot(root))
       // phase 1: un-publish rejected versions (marker create is the
@@ -886,7 +883,7 @@ object Snapshots {
                    shards: Int = ShardExport.DefaultShards,
                    groups: Int = ShardExport.DefaultGroups): Unit =
     Lease.withLease(spark, root, "snapshot-shards") {
-      val f = fsOf(spark, root)
+      val f = fsOf(spark, new Path(root))
       require(f.exists(sealFile(root, v)),
         s"snapshot v=$v at $root is not sealed")
       val k = liveRevision(f, root, v)
@@ -924,7 +921,7 @@ object Snapshots {
     * forgotten documents to a trainer is exactly what the staleness
     * fence is for. */
   def openShards(spark: SparkSession, root: String, v: Long): DataFrame = {
-    val f = fsOf(spark, root)
+    val f = fsOf(spark, new Path(root))
     require(f.exists(sealFile(root, v)),
       s"snapshot v=$v at $root is not sealed")
     val revs = shardRevisions(f, root, v)
@@ -942,7 +939,7 @@ object Snapshots {
   /** True iff `v` has a shard export whose source data revision is
     * still the live one. */
   def shardsFresh(spark: SparkSession, root: String, v: Long): Boolean = {
-    val f = fsOf(spark, root)
+    val f = fsOf(spark, new Path(root))
     val revs = shardRevisions(f, root, v)
     revs.nonEmpty && revs.last == liveRevision(f, root, v)
   }
@@ -967,7 +964,7 @@ object Snapshots {
     * behind [[openShards]]' staleness fence; `ctx` comes back from the
     * export's own marker. */
   def shardReport(spark: SparkSession, root: String, v: Long): DataFrame = {
-    val f = fsOf(spark, root)
+    val f = fsOf(spark, new Path(root))
     val m = openShards(spark, root, v)
     val k = shardRevisions(f, root, v).last
     val ctx = markerParam(markerLines(f, shardOk(root, v, k)), "ctx",
@@ -1010,7 +1007,7 @@ object Snapshots {
     * same packing over the surviving docs. */
   def reexportStaleShards(spark: SparkSession, root: String,
                           docs: DataFrame): Unit = {
-    val f = fsOf(spark, root)
+    val f = fsOf(spark, new Path(root))
     for (v <- versions(spark, root)) {
       val revs = shardRevisions(f, root, v)
       if (revs.nonEmpty && revs.last != liveRevision(f, root, v)) {
@@ -1049,7 +1046,7 @@ object Snapshots {
   def redact(spark: SparkSession, root: String, victims: DataFrame,
              idCol: String = "doc_id"): Unit =
     Lease.withLease(spark, root, "snapshot-redact") {
-      val f = fsOf(spark, root)
+      val f = fsOf(spark, new Path(root))
       val vIds = victims.select(col(idCol)).distinct().localCheckpoint(true)
       for (v <- versions(spark, root)) {
         legacySwapRepair(spark, f, root, v)

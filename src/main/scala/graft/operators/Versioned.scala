@@ -52,12 +52,9 @@ private[operators] object Versioned {
 
   def manifestDir(path: String): String = s"$path/manifest"
 
-  private def fs(spark: SparkSession, path: String): FileSystem =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   def currentVersion(spark: SparkSession, path: String): Long = {
     val dir = new Path(manifestDir(path))
-    val f = fs(spark, path)
+    val f = fsOf(spark, new Path(path))
     if (!f.exists(dir)) 0L
     else f.listStatus(dir).map(_.getPath.getName)
       .collect { case ManifestName(v) => v.toLong }
@@ -67,7 +64,7 @@ private[operators] object Versioned {
   def current(spark: SparkSession, path: String): Man = {
     val v = currentVersion(spark, path)
     if (v == 0L) return Man(0L, 0L, 1L, 0L)
-    val in = fs(spark, path).open(new Path(manifestDir(path), s"v=$v.txt"))
+    val in = fsOf(spark, new Path(path)).open(new Path(manifestDir(path), s"v=$v.txt"))
     val kv =
       try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
         .filter(_.nonEmpty)
@@ -90,7 +87,7 @@ private[operators] object Versioned {
     * copy a reader could observe half-written). */
   def publish(spark: SparkSession, path: String, v: Long, base: Long,
               epoch: Long, cents: Long): Unit = {
-    val f = fs(spark, path)
+    val f = fsOf(spark, new Path(path))
     val dir = new Path(manifestDir(path))
     f.mkdirs(dir)
     val tmp = new Path(dir, s".tmp-v=$v.txt")
@@ -126,7 +123,7 @@ private[operators] object Versioned {
     * ownership sidecar; None for a FULL version. */
   def cellOwnersIfManifested(spark: SparkSession, path: String,
                              v: Long): Option[Map[Long, Long]] = {
-    val f = fs(spark, path)
+    val f = fsOf(spark, new Path(path))
     val p = new Path(cellsPath(path, v), CellManifest)
     if (!f.exists(p)) None
     else {
@@ -153,7 +150,7 @@ private[operators] object Versioned {
   def cellOwners(spark: SparkSession, path: String, v: Long): Map[Long, Long] =
     if (v == 0L) Map.empty
     else cellOwnersIfManifested(spark, path, v).getOrElse(
-      listCids(fs(spark, path), cellsPath(path, v)).map(_ -> v).toMap)
+      listCids(fsOf(spark, new Path(path)), cellsPath(path, v)).map(_ -> v).toMap)
 
   private def writeCellOwners(f: FileSystem, path: String, v: Long,
                               owners: Map[Long, Long]): Unit = {
@@ -231,7 +228,7 @@ private[operators] object Versioned {
   def deleteCells(spark: SparkSession, path: String, idCol: String,
                   ids: DataFrame,
                   maxBroadcastIds: Long = DefaultMaxBroadcastIds): Unit = {
-    val f = fs(spark, path)
+    val f = fsOf(spark, new Path(path))
     val m = current(spark, path)
     val bulk = openBulkResolved(spark, path, m.base)
     val delta =
@@ -276,7 +273,7 @@ private[operators] object Versioned {
     * summaries, no data read. */
   def deltaShare(spark: SparkSession, path: String): Double = {
     val m = current(spark, path)
-    val f = fs(spark, path)
+    val f = fsOf(spark, new Path(path))
     def bytes(dir: String): Long = {
       val p = new Path(dir)
       if (!f.exists(p)) 0L else f.getContentSummary(p).getLength
@@ -319,7 +316,7 @@ private[operators] object Versioned {
     * doesn't hold contribute 0. */
   def cellBytes(spark: SparkSession, path: String, cids: Seq[Long]): Long = {
     val m = current(spark, path)
-    val f = fs(spark, path)
+    val f = fsOf(spark, new Path(path))
     def bytes(dir: String): Long = {
       val p = new Path(dir)
       if (!f.exists(p)) 0L else f.getContentSummary(p).getLength
@@ -373,7 +370,7 @@ private[operators] object Versioned {
                      idCol: String): Option[DataFrame] = {
     val m = current(spark, path)
     val dir = deltaPath(path, m.epoch)
-    val f = fs(spark, path)
+    val f = fsOf(spark, new Path(path))
     val p = new Path(dir)
     val bDirs =
       if (!f.exists(p)) Array.empty[Path]
@@ -417,7 +414,7 @@ private[operators] object Versioned {
     * replayed micro-batch's partition overwrite could clobber them. */
   def requireBatchEpoch(spark: SparkSession, path: String, epoch: Long): Unit = {
     val dir = new Path(deltaPath(path, epoch))
-    val f = fs(spark, path)
+    val f = fsOf(spark, new Path(path))
     val streamGoverned = f.exists(new Path(dir, "_spark_metadata")) ||
       (f.exists(dir) && f.listStatus(dir)
         .exists(_.getPath.getName.startsWith("b=")))
@@ -436,7 +433,7 @@ private[operators] object Versioned {
   def requireStreamAdoptable(spark: SparkSession, path: String, epoch: Long,
                              checkpoint: String): Unit = {
     val dir = deltaPath(path, epoch)
-    val f = fs(spark, path)
+    val f = fsOf(spark, new Path(path))
     val names =
       if (!f.exists(new Path(dir))) Array.empty[String]
       else f.listStatus(new Path(dir)).map(_.getPath.getName)
@@ -452,8 +449,7 @@ private[operators] object Versioned {
     // own path, not the index's
     val ckOffsets = new Path(s"$checkpoint/offsets")
     require(!names.exists(_.startsWith("b=")) ||
-      ckOffsets.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(ckOffsets),
+      fsOf(spark, ckOffsets).exists(ckOffsets),
       s"delta epoch $epoch already holds a stream lineage's batches and " +
         s"this checkpoint is fresh — batch numbering would restart at 0 " +
         s"and overwrite them; resume the original checkpoint or compact first")
@@ -479,7 +475,7 @@ private[operators] object Versioned {
     * @return true iff a stream lineage was re-keyed */
   def adoptStreamDelta(spark: SparkSession, path: String): Boolean = {
     val m = current(spark, path)
-    val f = fs(spark, path)
+    val f = fsOf(spark, new Path(path))
     val dir = new Path(deltaPath(path, m.epoch))
     val streamGoverned = f.exists(new Path(dir, "_spark_metadata")) ||
       (f.exists(dir) && f.listStatus(dir)
@@ -504,7 +500,7 @@ private[operators] object Versioned {
     * `b=` child counts when IT holds cells. */
   def hasCells(spark: SparkSession, dir: String): Boolean = {
     val p = new Path(dir)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val f = fsOf(spark, p)
     f.exists(p) && f.listStatus(p).exists { st =>
       val n = st.getPath.getName
       n.startsWith("cid=") || (n.startsWith("b=") &&
@@ -522,7 +518,7 @@ private[operators] object Versioned {
   def agedRule(spark: SparkSession, path: String, curV: Long,
                graceMs: Long, now: Long): Long => Boolean = {
     val bound =
-      try fs(spark, path)
+      try fsOf(spark, new Path(path))
         .getFileStatus(new Path(manifestDir(path), s"v=$curV.txt"))
         .getModificationTime
       catch { case _: java.io.IOException => now }
@@ -534,7 +530,7 @@ private[operators] object Versioned {
     * themselves. */
   def gcSweep(spark: SparkSession, path: String, m: Man, graceMs: Long,
               families: Seq[(String, String, Long => Boolean)]): Unit = {
-    val f = fs(spark, path)
+    val f = fsOf(spark, new Path(path))
     val now = System.currentTimeMillis()
     val aged = agedRule(spark, path, m.v, graceMs, now)
     for ((dir, prefix, keep) <- families) {

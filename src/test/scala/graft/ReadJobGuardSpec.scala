@@ -1,5 +1,6 @@
 package graft
 
+import graft.obs.JobCosts
 import graft.operators.{LexIndex, PqIndex, VecIndex}
 import graft.pipelines.{Curation, DailyDriver}
 import graft.sources.DriverParquet
@@ -15,9 +16,9 @@ class ReadJobGuardSpec extends SparkSpecBase {
 
   test("loading each table starts no job") {
     Tables.names.foreach { n =>
-      assert(JobCounter.during(spark)(Tables.load(spark, sf, n))._2.isEmpty, n)
+      assert(JobCosts.during(spark)(Tables.load(spark, sf, n))._2.isEmpty, n)
     }
-    assert(JobCounter.during(spark)(Tables.events(spark, sf))._2.isEmpty, "events")
+    assert(JobCosts.during(spark)(Tables.events(spark, sf))._2.isEmpty, "events")
   }
 
   test("init, step and hybridSearch start no job outside a SQL execution; " +
@@ -30,7 +31,7 @@ class ReadJobGuardSpec extends SparkSpecBase {
     val cfg = Curation.Config(minQuality = 2.95)
     val dir = tempDir("read-job-guard")
 
-    val (_, jobs) = JobCounter.during(spark) {
+    val (_, costs) = JobCosts.during(spark) {
       DailyDriver.init(spark, docs.filter(col("doc_id") < 160), bench, dir, cfg, Some(emb))
       DailyDriver.step(spark, docs.filter(col("doc_id") >= 160), bench, dir, cfg, Some(emb))
       val queries = docs.filter(col("doc_id") % 20 === 1)
@@ -39,6 +40,7 @@ class ReadJobGuardSpec extends SparkSpecBase {
         .select(col("doc_id").as("q_id"), col("embedding"))
       DailyDriver.hybridSearch(spark, dir, queries, probes, k = 3).collect()
     }
+    val jobs = costs.map(_.executionId)
     assert(jobs.nonEmpty)
     assert(jobs.count(_.isEmpty) == 0,
       s"${jobs.count(_.isEmpty)} of ${jobs.size} jobs ran outside a SQL execution")
@@ -52,7 +54,7 @@ class ReadJobGuardSpec extends SparkSpecBase {
       "LexIndex.stats" -> (() => LexIndex.stats(spark, lex)),
       "Pinned.stats" -> (() => LexIndex.pinned(spark, lex).stats))
     opens.foreach { case (name, open) =>
-      val (df, started) = JobCounter.during(spark)(open())
+      val (df, started) = JobCosts.during(spark)(open())
       assert(started.isEmpty, s"$name started ${started.size} job(s)")
       assert(df.columns.nonEmpty, name)
     }
