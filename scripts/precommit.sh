@@ -23,4 +23,14 @@ if [ -n "$listeners" ]; then
   echo "precommit: SparkListener outside graft.obs.JobCosts" >&2
   exit 1
 fi
+# The engine starts no operating-system process: Hadoop's local file
+# system would start a chmod/readlink per file without libhadoop, which
+# graft.sources.LocalFiles answers in-process (README, "Local files").
+spawns=$(grep -rnE 'ProcessBuilder|Runtime\.getRuntime\.exec|scala\.sys\.process|Shell\.execCommand' \
+           src/main/scala || true)
+if [ -n "$spawns" ]; then
+  echo "$spawns"
+  echo "precommit: process spawn in the main sources" >&2
+  exit 1
+fi
 sbt -batch compile Test/compile

@@ -53,13 +53,15 @@ object Explain {
         val (cold, _) = materialize(spark, sfDir, q)
         val ((warm, plan), jobs) = JobCosts.during(spark)(materialize(spark, sfDir, q))
         say(f"===== ${q.name} cold $cold%.2f s warm $warm%.2f s, ${jobs.size} jobs =====")
-        say("   job  exec   wall_s tasks   run_s   cpu_s   gc_s shufR_MB shufW_MB spill_MB  call site")
+        say("   job  exec   wall_s tasks   run_s   cpu_s   gc_s shufR_MB shufW_MB spill_MB  call site [group= desc= scope=]")
         jobs.foreach { j =>
           say(f"  ${j.id}%4d ${j.executionId.fold("-")(_.toString)}%5s " +
             f"${j.seconds.fold("open")(s => f"$s%.3f")}%8s ${j.tasks}%5d " +
             f"${j.runMs / 1e3}%7.2f ${j.cpuNs / 1e9}%7.2f ${j.gcMs / 1e3}%6.2f " +
             f"${j.shuffleReadBytes / Mb}%8.2f ${j.shuffleWriteBytes / Mb}%8.2f " +
-            f"${j.spillBytes / Mb}%8.2f  ${j.callSite}")
+            f"${j.spillBytes / Mb}%8.2f  ${j.callSite}" +
+            Seq("group" -> j.group, "desc" -> j.description, "scope" -> j.scope)
+              .collect { case (k, Some(v)) => s" $k=$v" }.mkString)
         }
         say(plan.executedPlan.toString)
         out.foreach { case (dir, suffix) =>

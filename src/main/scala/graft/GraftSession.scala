@@ -15,6 +15,10 @@ import org.apache.spark.sql.SparkSession
   * codegen stage id reuses its class. The cache size is a static conf,
   * read once when Spark's code generator first loads: it only takes
   * effect when this builder creates the JVM's SparkContext.
+  *
+  * The `file:` scheme is bound to [[sources.LocalFiles]], which sets
+  * permissions and reads link status in-process instead of starting a
+  * `chmod` or `readlink` process per file.
   */
 object GraftSession {
   def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
@@ -35,6 +39,10 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.codegen.cache.maxEntries", "2000")
       .config("spark.sql.codegen.useIdInClassName", "false")
+      // local files without a chmod/readlink process per file (LocalFiles)
+      .config("spark.hadoop.fs.file.impl", classOf[sources.LocalFiles.Local].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[sources.LocalFiles.Fs].getName)
 
   def get(): SparkSession = {
     val s = builder().getOrCreate()

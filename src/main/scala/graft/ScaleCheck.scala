@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.fsOf
 import graft.sources.DriverParquet
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -270,7 +271,7 @@ object ScaleCheck {
       spark.catalog.clearCache()
       val dir = s"target/scalecheck_driver/${d.replaceAll("[^A-Za-z0-9]", "_")}"
       val dp = new org.apache.hadoop.fs.Path(dir)
-      dp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dp, true)
+      fsOf(spark, dp).delete(dp, true)
       val docs = Tables.documents(spark, d).select(col("doc_id"), col("text"))
       val emb = Tables.embeddings(spark, d)
         .select(col("vec_id").as("doc_id"), col("embedding"))
@@ -389,7 +390,7 @@ object ScaleCheck {
     spark.catalog.clearCache()
     val dir = "target/scalecheck_driver_aging"
     val dp = new org.apache.hadoop.fs.Path(dir)
-    val hfs = dp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val hfs = fsOf(spark, dp)
     hfs.delete(dp, true)
     def files(): Long = {
       if (!hfs.exists(dp)) return 0L
@@ -577,7 +578,7 @@ object ScaleCheck {
       spark.catalog.clearCache()
       val root = s"target/scalecheck_hybrid/${d.replaceAll("[^A-Za-z0-9]", "_")}"
       val rp = new org.apache.hadoop.fs.Path(root)
-      rp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(rp, true)
+      fsOf(spark, rp).delete(rp, true)
       val t0 = System.nanoTime()
       graft.queries.CurationQ7.buildHybridIndexes(spark, d, root)
       val tBuild = (System.nanoTime() - t0) / 1e9
@@ -864,7 +865,7 @@ object ScaleCheck {
     // are the cost, and the code table's are dim×4/m smaller
     def dirBytes(p: String): Long = {
       val hp = new org.apache.hadoop.fs.Path(p)
-      val f = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val f = fsOf(spark, hp)
       if (f.exists(hp)) f.getContentSummary(hp).getLength else 0L
     }
     val rawMb = dirBytes(s"$vdir/cells") / 1e6

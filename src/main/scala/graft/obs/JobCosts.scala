@@ -10,13 +10,22 @@ import org.apache.spark.sql.execution.SQLExecution
 
 /** What one Spark job cost. `executionId` is the SQL execution the job
   * ran in (None for a job started outside one, such as an RDD action).
-  * `callSite` is the name of the job's last stage. `seconds` is the
+  * `callSite` is the name of the job's last stage. `group` and
+  * `description` are the job group and `spark.job.description` of the
+  * thread that started the job, which tell apart the jobs of code
+  * running side by side. `scope` is the plan operator that started it,
+  * with its scope id (`BroadcastExchange 79`): Spark names every
+  * broadcast and AQE stage job after the same `CompletableFuture`
+  * frame, and carries no group for them. `seconds` is the
   * job's wall time, None while the job is open (no end event yet). The
   * task figures are sums over the tasks that ended. */
 final case class Job(
     id: Int,
     executionId: Option[Long],
     callSite: String,
+    group: Option[String],
+    description: Option[String],
+    scope: Option[String],
     seconds: Option[Double],
     tasks: Int,
     runMs: Long,
@@ -29,6 +38,13 @@ final case class Job(
 /** The engine's one `SparkListener`: the jobs a block of code starts,
   * and what each of them costs. */
 object JobCosts {
+
+  // SparkContext's local-property keys (private to Spark)
+  private val GroupKey = "spark.jobGroup.id"
+  private val DescriptionKey = "spark.job.description"
+  private val ScopeKey = "spark.rdd.scope"
+  private val ScopeName = "\"name\":\"([^\"]*)\"".r.unanchored
+  private val ScopeId = "\"id\":\"([^\"]*)\"".r.unanchored
 
   /** Runs `body` and returns its result with every job started while it
     * ran, in id order. Jobs of every thread count, so a stream's
@@ -47,6 +63,12 @@ object JobCosts {
     } finally sc.removeSparkListener(recorder)
   }
 
+  /** `{"id":"79","name":"BroadcastExchange"}` → `BroadcastExchange 79`. */
+  private def scopeOf(json: String): String = (json, json) match {
+    case (ScopeName(name), ScopeId(id)) => s"$name $id"
+    case _ => json
+  }
+
   private final class Recorder extends SparkListener {
     private val byId = mutable.Map.empty[Int, Job]
     private val startMs = mutable.Map.empty[Int, Long]
@@ -55,11 +77,11 @@ object JobCosts {
     def jobs: Seq[Job] = synchronized(byId.values.toSeq.sortBy(_.id))
 
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-      val executionId = Option(e.properties)
-        .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
-        .map(_.toLong)
+      def prop(key: String) = Option(e.properties).flatMap(p => Option(p.getProperty(key)))
       val site = e.stageInfos.sortBy(_.stageId).lastOption.fold("?")(_.name)
-      byId(e.jobId) = Job(e.jobId, executionId, site, None, 0, 0L, 0L, 0L, 0L, 0L, 0L)
+      byId(e.jobId) = Job(e.jobId, prop(SQLExecution.EXECUTION_ID_KEY).map(_.toLong), site,
+        prop(GroupKey), prop(DescriptionKey), prop(ScopeKey).map(scopeOf),
+        None, 0, 0L, 0L, 0L, 0L, 0L, 0L)
       startMs(e.jobId) = e.time
       // a stage shared by several jobs counts for the first that needs it
       e.stageIds.foreach(s => stageJob.getOrElseUpdate(s, e.jobId))

@@ -258,10 +258,13 @@ object VecIndex {
     *               multi-probe). BOUNDED by definition of a probe batch;
     *               its cell list is collected (tiny) to drive partition
     *               pruning — the pushed `cid IN (...)` is what keeps the
-    *               scan to nprobe/k of the corpus. */
+    *               scan to nprobe/k of the corpus.
+    * @param cells  the probes' distinct `q_cid` values when the caller
+    *               already collected them (None: collected here) */
   def search(index: DataFrame, probes: DataFrame,
-             idCol: String, vecCol: String, k: Int): DataFrame =
-    topK(index, probes, None, idCol, vecCol, k)
+             idCol: String, vecCol: String, k: Int,
+             cells: Option[Seq[Any]] = None): DataFrame =
+    topK(index, probes, None, idCol, vecCol, k, cells)
 
   /** [[search]] restricted to a CANDIDATE set — the exact-rerank half
     * of an IVFADC stack: an approximate generator (the [[PqIndex]] code
@@ -277,16 +280,19 @@ object VecIndex {
     * this index's degrades recall only, never correctness of returned
     * scores).
     *
-    * @param candidates (q_id, idCol) nominations, workload-sized */
+    * @param candidates (q_id, idCol) nominations, workload-sized
+    * @param cells      as in [[search]] */
   def rerank(index: DataFrame, probes: DataFrame, candidates: DataFrame,
-             idCol: String, vecCol: String, k: Int): DataFrame =
-    topK(index, probes, Some(candidates), idCol, vecCol, k)
+             idCol: String, vecCol: String, k: Int,
+             cells: Option[Seq[Any]] = None): DataFrame =
+    topK(index, probes, Some(candidates), idCol, vecCol, k, cells)
 
   private def topK(index: DataFrame, probes: DataFrame,
                    candidates: Option[DataFrame],
-                   idCol: String, vecCol: String, k: Int): DataFrame = {
-    val cells = probes.select(col("q_cid")).distinct()
-      .collect().map(_.get(0))
+                   idCol: String, vecCol: String, k: Int,
+                   knownCells: Option[Seq[Any]]): DataFrame = {
+    val cells = knownCells.getOrElse(
+      probes.select(col("q_cid")).distinct().collect().toSeq.map(_.get(0)))
     // zero-norm guard, matching build/assignFold's indexed-side filter:
     // an unguarded zero probe makes cos = 0/0 = NaN, and Spark sorts NaN
     // ABOVE every double, so the descending top-k window would rank the
@@ -300,7 +306,7 @@ object VecIndex {
     val scanned = index
       // literal IN list → partition pruning at file listing; the
       // broadcast-join residual below re-checks per-probe membership
-      .filter(col("cid").isin(cells.toIndexedSeq: _*))
+      .filter(col("cid").isin(cells: _*))
       .join(broadcast(pr), col("cid") === col("q_cid") && col(idCol) =!= col("q_id"))
     val nominated = candidates match {
       case None => scanned

@@ -66,6 +66,13 @@ import org.apache.spark.sql.functions._
   * step; a CRASHED writer's lease is taken over after the staleness
   * bound (see Lease's scaladoc for the takeover rules).
   *
+  * Concurrent store halves: within one call, the job chains of
+  * independent stores (signature index, fps, lexical, vector and PQ
+  * indexes, snapshots) run side by side through [[Par.forkJoin]], and
+  * every fork joins before the decision publish — the commit point
+  * stays last, and a failing half surfaces only once every other half
+  * has finished (README "Concurrent store halves").
+  *
   * Contract: arrivals' doc_ids are disjoint from every prior day's
   * (re-crawls are deduped upstream — `StreamOps.streamingCurate`), and
   * `cfg`/`benchmark` match day 0 — a changed policy means re-`init`.
@@ -73,7 +80,7 @@ import org.apache.spark.sql.functions._
   * wholesale overwrites, so re-running it converges).
   */
 object DailyDriver {
-  import graft.operators.{AtomicSwap, Lease, PartitionSwap}
+  import graft.operators.{AtomicSwap, Lease, PartitionSwap, fsOf}
 
   private def decisionsDir(dir: String) = s"$dir/decisions"
   private def indexDir(dir: String) = s"$dir/sig_index"
@@ -128,7 +135,7 @@ object DailyDriver {
     * partitioned layout wholesale first. One directory listing. */
   private def hasRootDataFiles(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, p)
     fs.exists(p) && fs.listStatus(p)
       .exists(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
   }
@@ -157,7 +164,7 @@ object DailyDriver {
 
   private def pathExists(spark: SparkSession, p: String): Boolean = {
     val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
+    fsOf(spark, hp).exists(hp)
   }
 
   /** The driver's vector-index root — public so retrieval code can
@@ -331,110 +338,117 @@ object DailyDriver {
     // ONE pinned manifest resolution: a concurrent step's merge
     // publishing between them would otherwise score one version's df
     // against another version's postings (silently wrong BM25)
-    val lex0 = LexIndex.pinned(spark, lexDir(dir))
-    val qdocs = queries.select(col("q_id"),
-      explode(array_distinct(
-        graft.functions.TextFunctions.tokens(col("text")))).as("term"))
-    val dfreq = lex0.termDf(qdocs.select(col("term")))
-    val nDocs = lex0.stats.select(col("n_docs"))
-    // qterms is consumed twice (bucket-id collect + probe join) and is
-    // workload-BOUNDED (≤ TermsPerQuery rows per query), so materialize
-    // it once as a local relation instead of .cache(): this is a
-    // RECURRING call, and a per-invocation cached RDD that nothing
-    // unpersists would leak executor storage batch after batch.
-    val qtOnce = Bm25.queryTerms(qdocs, dfreq, nDocs, maxDfPermille)
-    val qt = spark.createDataFrame(
-      java.util.Arrays.asList(qtOnce.collect(): _*), qtOnce.schema)
-    val lex = lex0.search(qt, depth)
-      .select(col("q_id"), col("doc_id"), col("rk").as("rb"))
+    def lexHalf: DataFrame = {
+      val lex0 = LexIndex.pinned(spark, lexDir(dir))
+      val qdocs = queries.select(col("q_id"),
+        explode(array_distinct(
+          graft.functions.TextFunctions.tokens(col("text")))).as("term"))
+      val dfreq = lex0.termDf(qdocs.select(col("term")))
+      val nDocs = lex0.stats.select(col("n_docs"))
+      // qterms is consumed twice (bucket-id collect + probe join) and is
+      // workload-BOUNDED (≤ TermsPerQuery rows per query), so materialize
+      // it once as a local relation instead of .cache(): this is a
+      // RECURRING call, and a per-invocation cached RDD that nothing
+      // unpersists would leak executor storage batch after batch.
+      val qtOnce = Bm25.queryTerms(qdocs, dfreq, nDocs, maxDfPermille)
+      val qt = spark.createDataFrame(
+        java.util.Arrays.asList(qtOnce.collect(): _*), qtOnce.schema)
+      lex0.search(qt, depth)
+        .select(col("q_id"), col("doc_id"), col("rk").as("rb"))
+    }
     // vector half — quantizer and cells from ONE pinned manifest
     // resolution (VecIndex.Pinned): a concurrent maintain() retrain
     // publishing between the two reads would otherwise assign probes
     // with the OLD quantizer against the NEW re-celled layout —
     // silently wrong neighbors, the exact cross-version race the
     // lexical half's LexIndex.Pinned closes
-    val vp = VecIndex.pinned(spark, vdir)
-    val cents = vp.centroids.getOrElse(
-      throw new IllegalStateException(
-        s"driver vec index at $vdir has no quantizer — init with embeddings first"))
-    // probe-sized assignment: skip the corpus-fan-out spread (round 14)
-    val pr0 = KMeans
-      .assignTopPrepared(KMeans.prep(probes, "q_id", "embedding"), "q_id",
-        cents, nprobe)
-      .join(probes, Seq("q_id"))
-      .select(col("q_id"), col("embedding").as("q_vec"), col("cid").as("q_cid"))
-    // the PQ path is taken only when the code table EXISTS and its
-    // coarse layout content-equals THIS call's pinned quantizer (one
-    // quantizer-sized read — noise next to the search): a dir whose
-    // pq_index was never built (a pre-PQ deployment, or an init that
-    // crashed between the two index builds) must fall back, not crash
-    // in openQuant; and between a committed vec retrain and the
-    // maintain pass that re-encodes the code table, the two stores are
-    // desynced and nominations would silently lose recall — fall back
-    // to the always-correct exact scan instead and let maintain repair
-    // the alignment
-    val pqUsable = (pqDepth == AutoDepth || pqDepth > 0) &&
-      graft.operators.PqIndex.currentVersion(spark, pqIndexDir(dir)) > 0L &&
-      pqCoarseAligned(spark, pqIndexDir(dir), collectCoarse(cents))
-    // AUTO-DEPTH: the round-11 crossover readout as policy. One
-    // metadata measurement (the probed cids' resolved bytes through the
-    // ownership chain — content summaries, no data read) against the
-    // budget: within it the probed floats are page-cache/compute-bound
-    // and the exact scan is the measured winner (depth 0); past it scan
-    // I/O is the wall clock, the code table's ~dim·4/m byte advantage
-    // pays, and the depth is the measured recall≈0.9 rule
-    // (AdcDepthPerK·k). Only the auto path pays the measurement — and
-    // it collects ONLY the distinct probed cids (a handful of longs),
-    // never the full (q_id, q_vec, q_cid) assignment: the full collect
-    // belongs to the PQ path alone, so a default call whose auto
-    // decision lands on the exact scan ships no embedding bytes to the
-    // driver at all (large query batches stay executor-side). An unset
-    // budget resolves to the heap proxy only in LOCAL mode; on a
-    // cluster the proxy misreads the fleet, so the auto policy stays on
-    // the always-correct exact scan and the compressed path is an
-    // explicit opt-in. An unusable code table (absent / coarse-
-    // desynced) short-circuits to the exact scan without measuring.
-    // Note the rerank stage still RESCANS the probed raw cells in this
-    // scan-based engine — the compressed path's lever is the NOMINATION
-    // scan's bytes (README's IVFADC section has the measured trade).
-    val budget =
-      if (pqAutoBudgetBytes != UnsetBudget) pqAutoBudgetBytes
-      else if (spark.sparkContext.isLocal) DefaultPqAutoBudgetBytes
-      else -1L
-    // when the auto measurement will run, materialize the assignment
-    // executor-side FIRST (one assignTop execution total — the
-    // measurement's distinct-cid collect and whichever search path wins
-    // both read the blocks; embedding bytes still never reach the
-    // driver unless the PQ path is taken)
-    val doMeasure = pqDepth == AutoDepth && pqUsable && budget >= 0L
-    val prM = if (doMeasure) pr0.localCheckpoint(true) else pr0
-    val effDepth =
-      if (pqDepth != AutoDepth) pqDepth
-      else if (!doMeasure) 0
-      else {
-        val probedCids = prM.select(col("q_cid")).distinct().collect()
-          .map(_.getAs[Number](0).longValue).toSeq
-        autoPqDepth(VecIndex.cellBytes(spark, vdir, probedCids),
-          budget, k)
-      }
-    val usePq = effDepth > 0 && pqUsable
-    // the probe assignment is materialized as a driver-local relation
-    // ONLY when the PQ path will consume it twice (searchAssigned's
-    // nomination input AND rerank's probe input — re-running the
-    // assignTop join per consumer would double the probe work); the
-    // exact path consumes it once
-    val pr =
-      if (usePq)
-        spark.createDataFrame(
-          java.util.Arrays.asList(prM.collect(): _*), prM.schema)
-      else prM
-    val vec0 =
-      if (!usePq) VecIndex.search(vp.index, pr, "doc_id", "embedding", depth)
-      else VecIndex.rerank(vp.index, pr,
-        PqIndex.searchAssigned(spark, pqIndexDir(dir), pr, "doc_id", effDepth)
-          .select(col("q_id"), col("doc_id")),
-        "doc_id", "embedding", depth)
-    val vec = vec0.select(col("q_id"), col("doc_id"), col("rk").as("rv"))
+    def vecHalf: DataFrame = {
+      val vp = VecIndex.pinned(spark, vdir)
+      val cents = vp.centroids.getOrElse(
+        throw new IllegalStateException(
+          s"driver vec index at $vdir has no quantizer — init with embeddings first"))
+      // probe-sized assignment: skip the corpus-fan-out spread (round 14)
+      val pr0 = KMeans
+        .assignTopPrepared(KMeans.prep(probes, "q_id", "embedding"), "q_id",
+          cents, nprobe)
+        .join(probes, Seq("q_id"))
+        .select(col("q_id"), col("embedding").as("q_vec"), col("cid").as("q_cid"))
+      // AUTO-DEPTH: the round-11 crossover readout as policy. One
+      // metadata measurement (the probed cids' resolved bytes through the
+      // ownership chain — content summaries, no data read) against the
+      // budget: within it the probed floats are page-cache/compute-bound
+      // and the exact scan is the measured winner (depth 0); past it scan
+      // I/O is the wall clock, the code table's ~dim·4/m byte advantage
+      // pays, and the depth is the measured recall≈0.9 rule
+      // (AdcDepthPerK·k). Only the auto path pays the measurement — and
+      // it collects ONLY the distinct probed cids (a handful of longs),
+      // never the full (q_id, q_vec, q_cid) assignment: the full collect
+      // belongs to the PQ path alone, so a default call whose auto
+      // decision lands on the exact scan ships no embedding bytes to the
+      // driver at all (large query batches stay executor-side). An unset
+      // budget resolves to the heap proxy only in LOCAL mode; on a
+      // cluster the proxy misreads the fleet, so the auto policy stays on
+      // the always-correct exact scan and the compressed path is an
+      // explicit opt-in. An unusable code table (absent / coarse-
+      // desynced) short-circuits to the exact scan without measuring.
+      // Note the rerank stage still RESCANS the probed raw cells in this
+      // scan-based engine — the compressed path's lever is the NOMINATION
+      // scan's bytes (README's IVFADC section has the measured trade).
+      val budget =
+        if (pqAutoBudgetBytes != UnsetBudget) pqAutoBudgetBytes
+        else if (spark.sparkContext.isLocal) DefaultPqAutoBudgetBytes
+        else -1L
+      val measurable = pqDepth == AutoDepth && budget >= 0L
+      // the PQ path is taken only when the code table EXISTS and its
+      // coarse layout content-equals THIS call's pinned quantizer (one
+      // quantizer-sized read — noise next to the search): a dir whose
+      // pq_index was never built (a pre-PQ deployment, or an init that
+      // crashed between the two index builds) must fall back, not crash
+      // in openQuant; and between a committed vec retrain and the
+      // maintain pass that re-encodes the code table, the two stores are
+      // desynced and nominations would silently lose recall — fall back
+      // to the always-correct exact scan instead and let maintain repair
+      // the alignment. When the auto measurement can run, the assignment
+      // is materialized executor-side beside that check (one assignTop
+      // execution total — the measurement's distinct-cid collect and
+      // whichever search path wins both read the blocks; embedding bytes
+      // still never reach the driver unless the PQ path is taken).
+      val (pqUsable, prM) = Par.both(spark)(
+        (pqDepth == AutoDepth || pqDepth > 0) &&
+          PqIndex.currentVersion(spark, pqIndexDir(dir)) > 0L &&
+          pqCoarseAligned(spark, pqIndexDir(dir), collectCoarse(cents)),
+        if (measurable) pr0.localCheckpoint(true) else pr0)
+      val probedCids =
+        if (measurable && pqUsable)
+          Some(prM.select(col("q_cid")).distinct().collect().toSeq.map(_.get(0)))
+        else None
+      val effDepth =
+        if (pqDepth != AutoDepth) pqDepth
+        else probedCids.fold(0)(cids => autoPqDepth(
+          VecIndex.cellBytes(spark, vdir, cids.map(_.asInstanceOf[Number].longValue)),
+          budget, k))
+      val usePq = effDepth > 0 && pqUsable
+      // the probe assignment is materialized as a driver-local relation
+      // ONLY when the PQ path will consume it twice (searchAssigned's
+      // nomination input AND rerank's probe input — re-running the
+      // assignTop join per consumer would double the probe work); the
+      // exact path consumes it once
+      val pr =
+        if (usePq)
+          spark.createDataFrame(
+            java.util.Arrays.asList(prM.collect(): _*), prM.schema)
+        else prM
+      val vec0 =
+        if (!usePq) VecIndex.search(vp.index, pr, "doc_id", "embedding", depth,
+          probedCids)
+        else VecIndex.rerank(vp.index, pr,
+          PqIndex.searchAssigned(spark, pqIndexDir(dir), pr, "doc_id", effDepth)
+            .select(col("q_id"), col("doc_id")),
+          "doc_id", "embedding", depth, probedCids)
+      vec0.select(col("q_id"), col("doc_id"), col("rk").as("rv"))
+    }
+    // the two halves read disjoint stores: build them side by side
+    val (lex, vec) = Par.both(spark)(lexHalf, vecHalf)
     Rrf.fuse(lex, vec, k)
   }
 
@@ -633,52 +647,6 @@ object DailyDriver {
     val mn = newDocs.agg(min(col("doc_id"))).collect()(0)
     require(!mn.isNullAt(0), "step needs a non-empty delta")
     val minId = mn.getLong(0)
-    // RETRY guard, decisions half: the partition publish is this step's
-    // COMMIT POINT (it runs last) — a replayed step that finds any
-    // arrival already decided is re-running after a crash that happened
-    // AT OR AFTER the publish, so every half below is landed and the
-    // whole pass is probe-cost. Recomputing the delta against a prev
-    // that already contains the arrivals would also violate
-    // curateIncremental's disjointness contract.
-    val decLanded = !prevB.join(deltaIds, Seq("doc_id"), "left_semi").isEmpty
-    // eager (localCheckpoint inside): fully materialized before any
-    // directory below is touched
-    val delta =
-      if (decLanded) None
-      else Some(Curation.curateIncrementalDelta(
-        prev, prevIndex, newDocs, benchmark, cfg))
-    // the arrivals' own decisions (either just computed or already
-    // persisted) gate which of them are CANDIDATES for the index halves
-    val arrivalDecisions = delta.getOrElse(prevB)
-      .join(deltaIds, Seq("doc_id"), "left_semi")
-    val newCand = candidates(newDocs, arrivalDecisions)
-    // RETRY guards: a step replayed after a crash may find either append
-    // already landed (both are job-committed, so they land whole or not
-    // at all). Daily ids are disjoint by contract, so one delta id
-    // present means that half is done — skip it instead of
-    // double-appending signatures / double-merging postings (the lex
-    // merge is NOT idempotent: a replayed published merge would
-    // double-count the delta). DailyDriverCrashSpec restores the
-    // pre-swap decision table and replays the step to pin this.
-    val sigLanded = !prevIndex
-      .join(deltaIds, Seq("doc_id"), "left_semi").isEmpty
-    if (!sigLanded) {
-      val sigDelta = graft.streaming.StreamOps.signatureIndex(newCand)
-        .withColumn("batch", lit(minId))
-      if (hasRootDataFiles(spark, indexDir(dir)))
-        // a FLAT table — the empty one a total takedown leaves, or a
-        // repaired wholesale replacement written without partitions —
-        // cannot take partition-dir appends (batch= dirs next to
-        // root-level files wedge discovery): re-found the partitioned
-        // layout wholesale, existing rows + the delta in one swap
-        AtomicSwap.swap(spark, indexDir(dir)) { tmp =>
-          openSigIndexBatched(spark, dir).unionByName(sigDelta)
-            .write.partitionBy("batch").parquet(tmp)
-        }
-      else
-        sigDelta.write.partitionBy("batch").mode("append")
-          .parquet(indexDir(dir))
-    }
     // fingerprint the arrivals (ALL of them — candidacy doesn't gate
     // the audit substrate), stamped with this step's batch so the
     // takedown's fps rewrite prunes to victim-bearing arrival days
@@ -687,27 +655,58 @@ object DailyDriver {
     // swaps/publishes this table. A pre-fps driver dir (upgraded
     // mid-life) starts the table here — its sealed snapshots then
     // carry fingerprints from this day on.
-    val fpsLanded = pathExists(spark, fpsDir(dir)) && {
-      AtomicSwap.repair(spark, fpsDir(dir))
-      PartitionSwap.repair(spark, fpsDir(dir))
-      !DriverParquet.read(spark).load(fpsDir(dir))
-        .join(deltaIds, Seq("doc_id"), "left_semi").isEmpty
+    def fpsHalf(): Unit = {
+      val fpsLanded = pathExists(spark, fpsDir(dir)) && {
+        AtomicSwap.repair(spark, fpsDir(dir))
+        PartitionSwap.repair(spark, fpsDir(dir))
+        !DriverParquet.read(spark).load(fpsDir(dir))
+          .join(deltaIds, Seq("doc_id"), "left_semi").isEmpty
+      }
+      if (!fpsLanded) {
+        val fpsDelta = graft.operators.Snapshots.fingerprints(newDocs)
+          .withColumn("batch", lit(minId))
+        if (hasRootDataFiles(spark, fpsDir(dir)))
+          // a FLAT table (legacy pre-partitioned layout, or a repaired
+          // wholesale replacement) cannot take partition-dir appends —
+          // re-found the partitioned layout wholesale, existing rows +
+          // the delta in one swap (the sig index's rule)
+          AtomicSwap.swap(spark, fpsDir(dir)) { tmp =>
+            openFpsBatched(spark, dir).unionByName(fpsDelta)
+              .write.partitionBy("batch").parquet(tmp)
+          }
+        else
+          fpsDelta.write.partitionBy("batch").mode("append")
+            .parquet(fpsDir(dir))
+      }
     }
-    if (!fpsLanded) {
-      val fpsDelta = graft.operators.Snapshots.fingerprints(newDocs)
-        .withColumn("batch", lit(minId))
-      if (hasRootDataFiles(spark, fpsDir(dir)))
-        // a FLAT table (legacy pre-partitioned layout, or a repaired
-        // wholesale replacement) cannot take partition-dir appends —
-        // re-found the partitioned layout wholesale, existing rows +
-        // the delta in one swap (the sig index's rule)
-        AtomicSwap.swap(spark, fpsDir(dir)) { tmp =>
-          openFpsBatched(spark, dir).unionByName(fpsDelta)
-            .write.partitionBy("batch").parquet(tmp)
-        }
-      else
-        fpsDelta.write.partitionBy("batch").mode("append")
-          .parquet(fpsDir(dir))
+    // RETRY guards: a step replayed after a crash may find either append
+    // already landed (both are job-committed, so they land whole or not
+    // at all). Daily ids are disjoint by contract, so one delta id
+    // present means that half is done — skip it instead of
+    // double-appending signatures / double-merging postings (the lex
+    // merge is NOT idempotent: a replayed published merge would
+    // double-count the delta). DailyDriverCrashSpec restores the
+    // pre-swap decision table and replays the step to pin this.
+    def sigHalf(newCand: DataFrame): Unit = {
+      val sigLanded = !prevIndex
+        .join(deltaIds, Seq("doc_id"), "left_semi").isEmpty
+      if (!sigLanded) {
+        val sigDelta = graft.streaming.StreamOps.signatureIndex(newCand)
+          .withColumn("batch", lit(minId))
+        if (hasRootDataFiles(spark, indexDir(dir)))
+          // a FLAT table — the empty one a total takedown leaves, or a
+          // repaired wholesale replacement written without partitions —
+          // cannot take partition-dir appends (batch= dirs next to
+          // root-level files wedge discovery): re-found the partitioned
+          // layout wholesale, existing rows + the delta in one swap
+          AtomicSwap.swap(spark, indexDir(dir)) { tmp =>
+            openSigIndexBatched(spark, dir).unionByName(sigDelta)
+              .write.partitionBy("batch").parquet(tmp)
+          }
+        else
+          sigDelta.write.partitionBy("batch").mode("append")
+            .parquet(indexDir(dir))
+      }
     }
     // fold the day's candidates into the retrieval index — touches only
     // the delta's term buckets (see LexIndex.merge; exact vs a full
@@ -716,25 +715,26 @@ object DailyDriver {
     // the stream landed per micro-batch, so a partially streamed day is
     // legitimately MIXED — merge exactly the unlanded remainder (the
     // docmap remainder probe; merge over disjoint new ids is exact).
-    if (streamed.isEmpty) {
-      if (!graft.operators.LexIndex.containsAny(spark, lexDir(dir), deltaIds))
-        graft.operators.LexIndex.merge(spark, lexDir(dir),
-          graft.operators.UnigramLm.termFreq(newCand, "doc_id", "text"))
-    } else {
-      val lexTodo = newCand.join(
-        graft.operators.LexIndex.presentIds(spark, lexDir(dir),
-          newCand.select(col("doc_id"))),
-        Seq("doc_id"), "left_anti")
-      if (!lexTodo.isEmpty)
-        graft.operators.LexIndex.merge(spark, lexDir(dir),
-          graft.operators.UnigramLm.termFreq(lexTodo, "doc_id", "text"))
-    }
+    def lexHalf(newCand: DataFrame): Unit =
+      if (streamed.isEmpty) {
+        if (!graft.operators.LexIndex.containsAny(spark, lexDir(dir), deltaIds))
+          graft.operators.LexIndex.merge(spark, lexDir(dir),
+            graft.operators.UnigramLm.termFreq(newCand, "doc_id", "text"))
+      } else {
+        val lexTodo = newCand.join(
+          graft.operators.LexIndex.presentIds(spark, lexDir(dir),
+            newCand.select(col("doc_id"))),
+          Seq("doc_id"), "left_anti")
+        if (!lexTodo.isEmpty)
+          graft.operators.LexIndex.merge(spark, lexDir(dir),
+            graft.operators.UnigramLm.termFreq(lexTodo, "doc_id", "text"))
+      }
     // vector half: append the day's CANDIDATE embeddings to the driver's
     // VecIndex delta, assigned against the index's pinned quantizer
     // (day 0's, or the latest retrain's — openCentroids tracks the
     // manifest). Same replay guard as the other appends: one landed
     // candidate id means the job-committed append is done — skip it.
-    embeddings.foreach { emb =>
+    def vecHalf(newCand: DataFrame): Unit = embeddings.foreach { emb =>
       import graft.operators.{PqIndex, VecIndex}
       val vdir = vecIndexDir(dir)
       val cents = VecIndex.openCentroids(spark, vdir).getOrElse(
@@ -806,6 +806,35 @@ object DailyDriver {
         }
       }
     }
+    // The store halves are independent directories, each with its own
+    // lease and replay guard, so they run side by side (Par): the fps
+    // append needs only the arrivals, so it runs beside the curation;
+    // the sig, lex and vec+PQ appends need the arrivals' candidacy and
+    // run beside each other once it exists. Every fork joins before the
+    // publish below.
+    val (_, delta) = Par.both(spark)(fpsHalf(), {
+      // RETRY guard, decisions half: the partition publish is this
+      // step's COMMIT POINT (it runs last) — a replayed step that finds
+      // any arrival already decided is re-running after a crash that
+      // happened AT OR AFTER the publish, so every half is landed and
+      // the whole pass is probe-cost. Recomputing the delta against a
+      // prev that already contains the arrivals would also violate
+      // curateIncremental's disjointness contract.
+      val decLanded = !prevB.join(deltaIds, Seq("doc_id"), "left_semi").isEmpty
+      // eager (localCheckpoint inside): fully materialized before any
+      // index half touches its directory
+      val delta =
+        if (decLanded) None
+        else Some(Curation.curateIncrementalDelta(
+          prev, prevIndex, newDocs, benchmark, cfg))
+      // the arrivals' own decisions (either just computed or already
+      // persisted) gate which of them are CANDIDATES for the index halves
+      val newCand = candidates(newDocs, delta.getOrElse(prevB)
+        .join(deltaIds, Seq("doc_id"), "left_semi"))
+      Par.forkJoin(spark)(
+        () => vecHalf(newCand), () => sigHalf(newCand), () => lexHalf(newCand))
+      delta
+    })
     // the delta-grain decision publish — the step's commit point. Each
     // delta row keeps its HOME batch (the step that introduced it);
     // arrivals get this step's. The touched-batch census is bounded by
@@ -944,7 +973,7 @@ object DailyDriver {
     // (day ids are unique, so the dedup is exact).
     val mbBase: Long = {
       val p = new org.apache.hadoop.fs.Path(stagingDir(dir))
-      val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val f = fsOf(spark, p)
       if (!f.exists(p)) 0L
       else {
         // digits-only parse (the LexIndex delta-dir rule): one stray
@@ -1004,7 +1033,7 @@ object DailyDriver {
     // costs).
     val resuming = {
       val p = new org.apache.hadoop.fs.Path(s"$ckpt/commits")
-      val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val f = fsOf(spark, p)
       f.exists(p) &&
         f.listStatus(p).exists(!_.getPath.getName.startsWith("."))
     }
@@ -1018,7 +1047,9 @@ object DailyDriver {
     // generation after its debt-gate fold (bumped when one ran), and
     // the next trigger must fence against THAT. One query's
     // micro-batches run strictly serialized on its execution thread,
-    // so the captured var needs no synchronization.
+    // and each joins its forks (the lex landing writes this var in
+    // one) before it returns, so the captured var needs no
+    // synchronization.
     var lexGen = LexIndex.deltaGen(spark, lexDir(dir))
     val vdir = vecIndexDir(dir)
     val pqdir = pqIndexDir(dir)
@@ -1063,12 +1094,17 @@ object DailyDriver {
         // another lineage's partition).
         val batch = batch0.persist(
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try if (!batch.isEmpty) {
+        // the staging write and the index landings touch disjoint stores:
+        // they run side by side (Par, on the micro-batch's own session)
+        // and join before the batch returns, so the next trigger sees
+        // every landing — lexGen included, written in its fork
+        def stageHalf(): Unit =
           batch.select(col("doc_id"), col("text"))
             .withColumn("mb", lit(mbBase + batchId))
             .write.partitionBy("mb").mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .parquet(stagingDir(dir))
+        def indexHalf(): Unit = {
           // candidacy ONCE per micro-batch, the batch score()'s exact
           // arithmetic: the gate's quality + the broadcast benchmark
           // shingle intersect — so the streamed index entries are
@@ -1092,11 +1128,11 @@ object DailyDriver {
               col("contam_ratio") <= cfg.maxContamRatio)
             .select(col("doc_id"), col("text"))
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try if (!cand.isEmpty) {
-            lexGen = LexIndex.appendStreamDeltaBatch(spark, lexDir(dir), cand,
+          try if (!cand.isEmpty) Par.forkJoin(batch0.sparkSession)(
+            () => lexGen = LexIndex.appendStreamDeltaBatch(spark, lexDir(dir), cand,
               lexDeltaBase + batchId, lexGen,
-              lexMaxDeltaShare, lexMaxDeltaBatches)
-            vecSide.foreach { case (emb, vecPin, pqPin, cents) =>
+              lexMaxDeltaShare, lexMaxDeltaBatches),
+            () => vecSide.foreach { case (emb, vecPin, pqPin, cents) =>
               // one cosine assignment, two stores (the batch step's
               // appendAssigned rule — PQ's own coarse rule would
               // silently desync the pair doc by doc)
@@ -1118,9 +1154,12 @@ object DailyDriver {
                       "doc_id", "embedding", quant), batchId)
                 }
               } finally assigned.unpersist()
-            }
-          } finally cand.unpersist()
-        } finally batch.unpersist()
+            })
+          finally cand.unpersist()
+        }
+        try if (!batch.isEmpty)
+          Par.forkJoin(batch0.sparkSession)(() => stageHalf(), () => indexHalf())
+        finally batch.unpersist()
         ()
       }
       .start()
@@ -1179,13 +1218,9 @@ object DailyDriver {
     // remainder — zero full-index probes on a cleanly streamed day, one
     // remainder-sized probe per store on a partial one. Materialized
     // eagerly (delta-sized): the census must survive the adopt below.
-    val census = StreamCensus(
-      VecIndex.streamDeltaIds(spark, vecIndexDir(dir), "doc_id")
-        .map(_.distinct().localCheckpoint(true)),
-      PqIndex.streamDeltaIds(spark, pqIndexDir(dir), "doc_id")
-        .map(_.distinct().localCheckpoint(true)))
-    // hand the vector stores back to the BATCH discipline BEFORE the
-    // step (round 12 moved this up from after): the census-enabled
+    //
+    // Then hand the vector stores back to the BATCH discipline BEFORE
+    // the step (round 12 moved this up from after): the census-enabled
     // remainder appends are batch appends, and VecIndex.append refuses
     // a stream-governed epoch by design. O(delta) re-key + epoch bump —
     // never the corpus-linear fold, which stays maintain's policy call.
@@ -1198,8 +1233,6 @@ object DailyDriver {
     // is still present, the replayed reconcile reads census None (the
     // b= dirs are gone) and the step's full-probe fallback skips the
     // landed halves — the exact pre-census behavior.
-    VecIndex.adoptStreamDelta(spark, vecIndexDir(dir))
-    PqIndex.adoptStreamDelta(spark, pqIndexDir(dir))
     // the LEXICAL fold: the stream landed the day on the index's delta
     // side (search-visible all day); the day's source of truth is the
     // staging table, so RETIRE the delta first (generation bump under
@@ -1209,11 +1242,29 @@ object DailyDriver {
     // the day as unlanded). Retire-then-merge: a crash between the two
     // costs a brief search-visibility dip for the day — never a double
     // count — and the replayed reconcile re-merges from staging.
-    graft.operators.LexIndex.clearStreamDelta(spark, lexDir(dir))
+    //
+    // The three stores are independent directories under their own
+    // leases: their chains run side by side (Par) and join before the
+    // step.
+    val Seq(vecLanded, pqLanded, _) = Par.forkJoin[Option[DataFrame]](spark)(
+      () => {
+        val landed = VecIndex.streamDeltaIds(spark, vecIndexDir(dir), "doc_id")
+          .map(_.distinct().localCheckpoint(true))
+        VecIndex.adoptStreamDelta(spark, vecIndexDir(dir))
+        landed
+      },
+      () => {
+        val landed = PqIndex.streamDeltaIds(spark, pqIndexDir(dir), "doc_id")
+          .map(_.distinct().localCheckpoint(true))
+        PqIndex.adoptStreamDelta(spark, pqIndexDir(dir))
+        landed
+      },
+      () => { graft.operators.LexIndex.clearStreamDelta(spark, lexDir(dir)); None })
+    val census = StreamCensus(vecLanded, pqLanded)
     val out = stepImpl(spark, staged, benchmark, dir, cfg, embeddings,
       Some(census))
     val p = new org.apache.hadoop.fs.Path(sd)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    fsOf(spark, p).delete(p, true)
     out
   }
 
@@ -1273,50 +1324,63 @@ object DailyDriver {
     val vIds = victims.select(col("doc_id")).distinct().localCheckpoint(true)
     refoundPartitioned(spark, openDecisionsBatched(spark, dir),
       decisionsDir(dir))
-    refoundPartitioned(spark, openSigIndexBatched(spark, dir), indexDir(dir))
     val prevB = openDecisionsBatched(spark, dir)
     val prev = prevB.drop("batch")
     // the delta: every re-decided survivor row (eager, delta-sized) —
-    // victims themselves are simply dropped from their partitions
-    val redecided = Curation.forgetDelta(prev, vIds, docs, cfg)
-    // index halves first (idempotent), decisions publish last (the
+    // victims themselves are simply dropped from their partitions.
+    // The store retractions run beside it (Par — independent
+    // directories, each under its own lease, and none is read by the
+    // re-decision) and all join before the decisions publish below (the
     // commit point) — see the replay contract above. The signature
     // rewrite is PARTITION-PRUNED: only victim-bearing batches move
     // (one column-pruned census scan to find them), so the takedown's
     // sig cost is delta-proportional like the other stores' — the
     // whole-table anti-join swap is gone.
-    pruneVictimBatches(spark, indexDir(dir),
-      openSigIndexBatched(spark, dir), vIds)
-    if (LexIndex.currentVersion(spark, lexDir(dir)) > 0L)
-      LexIndex.delete(spark, lexDir(dir), vIds)
-    // the vector deletes publish a fresh cells version — a corpus-sized
-    // rewrite — so gate them on a victim actually being present (the
-    // lex delete's victimBuckets probe gives it this for free): a
-    // post-swap replay, or victims that were never candidates, must
-    // stay a metadata-cost no-op instead of rewriting and re-bumping
-    // both stores for nothing
-    val vdir = vecIndexDir(dir)
-    if (VecIndex.currentVersion(spark, vdir) > 0L &&
-        VecIndex.containsAny(spark, vdir, vIds))
-      VecIndex.delete(spark, vdir, "doc_id", vIds)
-    val pqdir = pqIndexDir(dir)
-    if (PqIndex.currentVersion(spark, pqdir) > 0L &&
-        PqIndex.containsAny(spark, pqdir, vIds))
-      PqIndex.delete(spark, pqdir, "doc_id", vIds)
-    // the victims' text-derived fingerprints go too — the signature
-    // rewrite's exact partition-pruned protocol
-    if (pathExists(spark, fpsDir(dir))) {
-      refoundPartitioned(spark, openFpsBatched(spark, dir), fpsDir(dir))
-      pruneVictimBatches(spark, fpsDir(dir),
-        openFpsBatched(spark, dir), vIds)
-    }
-    // ... and the takedown cascades through SEALED history: every
-    // snapshot version containing a victim is redacted in place
-    // (version numbers and "run T ← snapshot N" records survive,
-    // minus exactly the forgotten rows). Idempotent per the redact
-    // contract, so the replay story above is unchanged.
-    if (graft.operators.Snapshots.versions(spark, snapshotsDir(dir)).nonEmpty)
-      graft.operators.Snapshots.redact(spark, snapshotsDir(dir), vIds)
+    val (redecided, _) = Par.both(spark)(
+      Curation.forgetDelta(prev, vIds, docs, cfg),
+      Par.forkJoin(spark)(
+        () => {
+          refoundPartitioned(spark, openSigIndexBatched(spark, dir), indexDir(dir))
+          pruneVictimBatches(spark, indexDir(dir),
+            openSigIndexBatched(spark, dir), vIds)
+        },
+        () =>
+          if (LexIndex.currentVersion(spark, lexDir(dir)) > 0L)
+            LexIndex.delete(spark, lexDir(dir), vIds),
+        // the vector deletes publish a fresh cells version — a
+        // corpus-sized rewrite — so gate them on a victim actually being
+        // present (the lex delete's victimBuckets probe gives it this for
+        // free): a post-swap replay, or victims that were never
+        // candidates, must stay a metadata-cost no-op instead of
+        // rewriting and re-bumping both stores for nothing
+        () => {
+          val vdir = vecIndexDir(dir)
+          if (VecIndex.currentVersion(spark, vdir) > 0L &&
+              VecIndex.containsAny(spark, vdir, vIds))
+            VecIndex.delete(spark, vdir, "doc_id", vIds)
+        },
+        () => {
+          val pqdir = pqIndexDir(dir)
+          if (PqIndex.currentVersion(spark, pqdir) > 0L &&
+              PqIndex.containsAny(spark, pqdir, vIds))
+            PqIndex.delete(spark, pqdir, "doc_id", vIds)
+        },
+        // the victims' text-derived fingerprints go too — the signature
+        // rewrite's exact partition-pruned protocol
+        () =>
+          if (pathExists(spark, fpsDir(dir))) {
+            refoundPartitioned(spark, openFpsBatched(spark, dir), fpsDir(dir))
+            pruneVictimBatches(spark, fpsDir(dir),
+              openFpsBatched(spark, dir), vIds)
+          },
+        // ... and the takedown cascades through SEALED history: every
+        // snapshot version containing a victim is redacted in place
+        // (version numbers and "run T ← snapshot N" records survive,
+        // minus exactly the forgotten rows). Idempotent per the redact
+        // contract, so the replay story above is unchanged.
+        () =>
+          if (graft.operators.Snapshots.versions(spark, snapshotsDir(dir)).nonEmpty)
+            graft.operators.Snapshots.redact(spark, snapshotsDir(dir), vIds)))
     // the delta-grain decision publish, LAST (the commit point): only
     // partitions holding a victim or a re-decided survivor move; a
     // batch whose every row was a victim is dropped through the same
@@ -1505,8 +1569,7 @@ object DailyDriver {
         .write.partitionBy("batch").mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .parquet(cleanedDir(dir))
-    val f = new org.apache.hadoop.fs.Path(cleanedDir(dir))
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val f = fsOf(spark, new org.apache.hadoop.fs.Path(cleanedDir(dir)))
     for (b <- hit if !liveBatches.contains(b))
       f.delete(new org.apache.hadoop.fs.Path(
         s"${cleanedDir(dir)}/batch=$b"), true)
@@ -1805,7 +1868,7 @@ object DailyDriver {
     refoundPartitioned(spark, openDecisionsBatched(spark, dir), dd)
     val prevB = openDecisionsBatched(spark, dir)
     val p = new org.apache.hadoop.fs.Path(dd)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val f = fsOf(spark, p)
     if (!f.exists(p)) return 0L
     val batches = f.listStatus(p).map(_.getPath.getName)
       .collect { case s if s.startsWith("batch=") =>
@@ -1835,7 +1898,7 @@ object DailyDriver {
     * empty table a total takedown leaves) count as one group. */
   private def fileDebtOf(spark: SparkSession, path: String): Double = {
     val dst = new org.apache.hadoop.fs.Path(path)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, dst)
     if (!fs.exists(dst)) return 0.0
     var files = 0L; var groups = 0L; var rootFiles = 0L
     for (st <- fs.listStatus(dst)) {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType}
 import graft.Tables
 import graft.functions.TextFunctions._
-import graft.operators.Bm25
+import graft.operators.{Bm25, fsOf}
 import graft.sources.DriverParquet
 
 /** Seventh batch — the round-6 depth items: INDEX-BACKED hybrid
@@ -144,7 +144,7 @@ object CurationQ7 {
       s"target/qindex/q121_${java.lang.Integer.toHexString(d.hashCode)}")
       .getAbsolutePath
     val rp = new org.apache.hadoop.fs.Path(root)
-    rp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(rp, true)
+    fsOf(s, rp).delete(rp, true)
     buildHybridIndexes(s, d, root)
     searchHybridIndexes(s, d, root)
   }
@@ -168,10 +168,9 @@ object CurationQ7 {
     * directory OR an engine layout change can never serve a stale index
     * (the reuse is exact, not heuristic). */
   private def dataFingerprint(s: SparkSession, d: String): String = {
-    val conf = s.sparkContext.hadoopConfiguration
     val parts = Seq("documents.parquet", "embeddings.parquet").map { t =>
       val p = new org.apache.hadoop.fs.Path(s"$d/$t")
-      val fs = p.getFileSystem(conf)
+      val fs = fsOf(s, p)
       fs.listStatus(p)
         .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
         .sorted.mkString(",")
@@ -215,7 +214,7 @@ object CurationQ7 {
       s"target/qindex/$prefix${dataFingerprint(s, d)}").getAbsolutePath
     graft.operators.AtomicSwap.repair(s, root)
     val rp = new org.apache.hadoop.fs.Path(root)
-    val fsys = rp.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val fsys = fsOf(s, rp)
     val staleMs = 10L * 60 * 1000
     val deadline = System.currentTimeMillis() + 3 * staleMs
     // the lease is PER ROOT (a dot-prefixed sibling dir the sibling

@@ -53,6 +53,25 @@ class JobCostsSpec extends SparkSpecBase {
     assert(rdd.map(_.executionId) == Seq(None))
   }
 
+  test("a job carries its thread's job group and description; a bare job none") {
+    val sc = spark.sparkContext
+    sc.setJobGroup("costs-spec-group", "costs spec job", interruptOnCancel = false)
+    val (_, tagged) =
+      try JobCosts.during(spark)(sc.parallelize(1 to 3).count())
+      finally sc.clearJobGroup()
+    assert(tagged.map(j => (j.group, j.description)) ==
+      Seq((Some("costs-spec-group"), Some("costs spec job"))))
+    val (_, bare) = JobCosts.during(spark)(sc.parallelize(1 to 3).count())
+    assert(bare.map(j => (j.group, j.description)) == Seq((None, None)))
+  }
+
+  test("a broadcast job names its plan operator") {
+    import org.apache.spark.sql.functions.broadcast
+    val (_, jobs) = JobCosts.during(spark)(
+      spark.range(1000).join(broadcast(spark.range(10).toDF("id")), "id").collect())
+    assert(jobs.exists(_.scope.exists(_.matches("BroadcastExchange \\d+"))), jobs)
+  }
+
   test("counts are complete when the block returns") {
     (1 to 10).foreach { i =>
       val (_, jobs) = JobCosts.during(spark) {
