@@ -33,4 +33,14 @@ if [ -n "$spawns" ]; then
   echo "precommit: process spawn in the main sources" >&2
   exit 1
 fi
+# Numbered markers commit through Versioned.publishMarker (README, "One
+# commit-marker protocol"); only the lease layer and the partition swap
+# call the atomic rename themselves.
+renames=$(grep -rnF 'Lease.atomicRename(' src/main/scala \
+            | grep -vE '^src/main/scala/graft/operators/(AtomicSwap|PartitionSwap)\.scala:' || true)
+if [ -n "$renames" ]; then
+  echo "$renames"
+  echo "precommit: hand-written commit point outside Versioned.publishMarker" >&2
+  exit 1
+fi
 sbt -batch compile Test/compile

@@ -368,6 +368,20 @@ object Lease {
       catch { case _: java.io.IOException => false }
     }
 
+  /** Commit `body` at `dst`: write it to `tmp`, drop a same-name
+    * predecessor (present only when this exact marker was committed
+    * before — a replay; the store's writer lease serializes committers),
+    * then [[atomicRename]] — the one step that makes the file visible,
+    * never half-written. Every numbered marker commits here, through
+    * [[Versioned.publishMarker]]. */
+  private[operators] def commitFile(fs: FileSystem, tmp: Path, dst: Path,
+                                    body: String): Unit = {
+    val out = fs.create(tmp, true)
+    try out.write(body.getBytes("UTF-8")) finally out.close()
+    fs.delete(dst, false)
+    require(atomicRename(fs, tmp, dst), s"commit failed: $tmp -> $dst")
+  }
+
   /** Sweep a break token judged STALE, the tombstone way. A bare delete
     * is check-then-delete: between reading the token's stale timestamp
     * and the delete, a competitor can sweep the stale token and a fresh

@@ -23,11 +23,15 @@ import org.apache.spark.sql.functions._
   *   path/docmap/v=V/tb=B/part-*.parquet  // (doc_id, tb) sidecar — delete's probe
   *   path/manifest/v=V.txt                // lines "B:V_B" — bucket → its live version
   * }}}
-  * The CURRENT index is defined by the highest-numbered manifest file,
-  * nothing else. A mutation ([[merge]]/[[delete]]/[[compact]]) writes
-  * its new bucket data and stats under the NEXT version — fresh paths
-  * the live index never references — and then publishes ONE new
-  * manifest file via a same-directory rename, the single atomic step.
+  * The manifest is [[Versioned]]'s: that object owns the commit-marker
+  * protocol — how `v=V.txt` is named, listed, written, committed, parsed
+  * and aged — and this store only supplies its `B:V_B` entries and its
+  * per-bucket gc sweep. The CURRENT index is defined by the
+  * highest-numbered manifest file, nothing else. A mutation
+  * ([[merge]]/[[delete]]/[[compact]]) writes its new bucket data and
+  * stats under the NEXT version — fresh paths the live index never
+  * references — and then publishes ONE new manifest file via a
+  * same-directory rename, the single atomic step.
   * A crash anywhere before that rename leaves the old manifest as the
   * maximum, so readers still see the old index fully consistent
   * (buckets, df, stats all from one version set), and the interrupted
@@ -61,61 +65,27 @@ object LexIndex {
 
   private def bucketsDir(path: String) = s"$path/buckets"
   private def statsDir(path: String) = s"$path/stats"
-  private def manifestDir(path: String) = s"$path/manifest"
   private def docmapDir(path: String) = s"$path/docmap"
 
   private def tb(term: Column): Column =
     pmod(graft.functions.TextFunctions.strHash(term), lit(Buckets))
 
   /** The published version the index currently reads at (0 = no
-    * successful build yet). */
-  def currentVersion(spark: SparkSession, path: String): Long = {
-    val dir = new Path(manifestDir(path))
-    val f = fsOf(spark, new Path(path))
-    if (!f.exists(dir)) 0L
-    else f.listStatus(dir).map(_.getPath.getName)
-      .collect { case ManifestName(v) => v.toLong }
-      .foldLeft(0L)(math.max)
-  }
-
-  private val ManifestName = "v=(\\d+)\\.txt".r
+    * successful build yet); the one-line readout VecIndex and PqIndex
+    * carry too. */
+  def currentVersion(spark: SparkSession, path: String): Long =
+    Versioned.currentVersion(spark, path)
 
   /** bucket id → the version whose directory holds that bucket's live
-    * rows. Empty map = empty index (a build over zero documents). */
-  private def readManifest(spark: SparkSession, path: String, v: Long): Map[Long, Long] = {
-    if (v == 0L) return Map.empty
-    val in = fsOf(spark, new Path(path)).open(new Path(manifestDir(path), s"v=$v.txt"))
-    try {
-      scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .filter(_.nonEmpty)
-        .map { line =>
-          val Array(b, bv) = line.split(":")
-          b.toLong -> bv.toLong
-        }.toMap
-    } finally in.close()
-  }
+    * rows: manifest `v`'s `B:V_B` entries. Empty map = empty index (a
+    * build over zero documents). */
+  private def bucketsAt(spark: SparkSession, path: String, v: Long): Map[Long, Long] =
+    Versioned.entriesAt(spark, path, v).map { case (b, bv) => b.toLong -> bv.toLong }
 
-  /** Publish `entries` as manifest version `v`: write to a dot-prefixed
-    * temp name in the manifest directory, then rename — one atomic
-    * same-directory move, the only step that changes what readers see. */
-  private def publishManifest(spark: SparkSession, path: String, v: Long,
-                              entries: Map[Long, Long]): Unit = {
-    val f = fsOf(spark, new Path(path))
-    val dir = new Path(manifestDir(path))
-    f.mkdirs(dir)
-    val tmp = new Path(dir, s".tmp-v=$v.txt")
-    val out = f.create(tmp, true)
-    try out.write(entries.toSeq.sorted.map { case (b, bv) => s"$b:$bv" }
-      .mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-    val dst = new Path(dir, s"v=$v.txt")
-    f.delete(dst, false) // only present if THIS version was already published
-    // THE atomic step of the index — on `file:` Hadoop's rename falls
-    // back to copy+delete, so route through the lease layer's NIO
-    // ATOMIC_MOVE (the same fix Versioned.publish carries)
-    require(Lease.atomicRename(f, tmp, dst),
-      s"manifest publish failed: $tmp -> $dst")
-  }
+  private def publishBuckets(spark: SparkSession, path: String, v: Long,
+                             man: Map[Long, Long]): Unit =
+    Versioned.publishEntries(spark, path, v,
+      man.toSeq.sorted.map { case (b, bv) => b.toString -> bv })
 
   private def bucketPath(path: String, b: Long, v: Long): String =
     s"${bucketsDir(path)}/v=$v/tb=$b"
@@ -144,7 +114,7 @@ object LexIndex {
     * current manifest — the full-index accessor the equivalence specs
     * compare with. Empty index → empty frame with the posting schema. */
   def openPostings(spark: SparkSession, path: String): DataFrame = {
-    val man = readManifest(spark, path, currentVersion(spark, path))
+    val man = bucketsAt(spark, path, currentVersion(spark, path))
     if (man.isEmpty) emptyPostings(spark)
     else readBuckets(spark, path, man, man.keys.toSeq)
   }
@@ -291,7 +261,7 @@ object LexIndex {
       // former doc-grain-then-aggregate path, without persisting a
       // doc-grain relation across two consumers)
       val written = writeVersion(spark, path, n, rows, Bm25.statsFromTf(tfKeyed))
-      publishManifest(spark, path, n, written.map(_ -> n).toMap)
+      publishBuckets(spark, path, n, written.map(_ -> n).toMap)
     }
   }
 
@@ -341,7 +311,7 @@ object LexIndex {
     val deltaTf = deltaTf0.filter(col("term").isNotNull && col("doc_id").isNotNull)
     val cur = currentVersion(spark, path)
     require(cur > 0L, s"no published index under $path — build first")
-    val man = readManifest(spark, path, cur)
+    val man = bucketsAt(spark, path, cur)
     val touched = precomputed.map(_._1.toArray).getOrElse(
       deltaTf.select(tb(col("term")).as("tb")).distinct()
         .collect().map(_.getLong(0)))
@@ -376,7 +346,7 @@ object LexIndex {
     val written = writeVersion(spark, path, cur + 1L, withDf,
       statsRow(spark, newN, newT))
     beforePublish()
-    publishManifest(spark, path, cur + 1L,
+    publishBuckets(spark, path, cur + 1L,
       man ++ written.map(_ -> (cur + 1L)))
   }
 
@@ -417,16 +387,9 @@ object LexIndex {
   /** (generation, marker mtime) of the newest marker — the mtime is the
     * RETIREMENT instant of everything below it, gc's supersession
     * bound. None before any bump. */
-  private def deltaGenStatus(f: FileSystem, path: String): Option[(Long, Long)] = {
-    val dir = new Path(deltaDir(path))
-    if (!f.exists(dir)) None
-    else f.listStatus(dir).toSeq
-      .flatMap(st => st.getPath.getName match {
-        case DeltaGenName(g) => Some((g.toLong, st.getModificationTime))
-        case _ => None
-      })
-      .sortBy(_._1).lastOption
-  }
+  private def deltaGenStatus(f: FileSystem, path: String): Option[(Long, Long)] =
+    Versioned.numbered(f, new Path(deltaDir(path)), DeltaGenName).lastOption
+      .map { case (g, st) => g -> st.getModificationTime }
 
   private def bumpDeltaGen(f: FileSystem, path: String, g: Long): Unit = {
     f.mkdirs(new Path(deltaDir(path)))
@@ -451,12 +414,8 @@ object LexIndex {
         s"legacy pre-generation delta layout under ${deltaDir(path)} " +
           s"(bare b= dirs) — reconcile the streamed day with the engine " +
           s"version that wrote it, or fold/clear it manually")
-    val g = deltaGen(spark, path)
-    val p = new Path(deltaGenDir(path, g))
-    if (!f.exists(p)) Seq.empty
-    else f.listStatus(p).map(_.getPath)
-      .filter(q => DeltaBatchDirName.pattern.matcher(q.getName).matches)
-      .map(_.toString).sorted.toSeq
+    Versioned.numbered(f, new Path(deltaGenDir(path, deltaGen(spark, path))),
+      DeltaBatchDirName).map(_._2.getPath.toString).sorted
   }
 
   /** The live stream lineage(s)' delta rows (term, doc_id, tf, dl) —
@@ -539,15 +498,9 @@ object LexIndex {
   /** True when the CURRENT delta generation was opened by a mid-stream
     * fold — [[graft.pipelines.DailyDriver.stepStream]]'s start guard. */
   private[graft] def hasLiveFoldMarker(spark: SparkSession, path: String): Boolean = {
-    val f = fsOf(spark, new Path(path))
-    val dir = new Path(deltaDir(path))
-    f.exists(dir) && {
-      val cur = deltaGen(spark, path)
-      f.listStatus(dir).exists(st => st.getPath.getName match {
-        case FoldMarkerName(g) => g.toLong == cur
-        case _ => false
-      })
-    }
+    val cur = deltaGen(spark, path)
+    Versioned.numbered(fsOf(spark, new Path(path)), new Path(deltaDir(path)),
+      FoldMarkerName).exists(_._1 == cur)
   }
 
   /** Bulk bytes of the CURRENT manifest's referenced bucket dirs —
@@ -562,10 +515,10 @@ object LexIndex {
   private val bulkBytesMemo =
     new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Long]()
 
-  private def bulkBytes(f: FileSystem, path: String, v: Long,
-                        man: Map[Long, Long]): Long = {
+  private def bulkBytes(spark: SparkSession, f: FileSystem, path: String,
+                        v: Long, man: Map[Long, Long]): Long = {
     if (bulkBytesMemo.size > 1024) bulkBytesMemo.clear()
-    val mtime = manifestMtime(f, path, v, -1L)
+    val mtime = Versioned.manifestMtime(spark, path, v).getOrElse(-1L)
     bulkBytesMemo.computeIfAbsent((path, v, mtime), { _ =>
       man.map { case (b, bv) =>
         val p = new Path(bucketPath(path, b, bv))
@@ -588,7 +541,7 @@ object LexIndex {
     val cur = currentVersion(spark, path)
     val bulk =
       if (cur <= 0L) 0L
-      else bulkBytes(f, path, cur, readManifest(spark, path, cur))
+      else bulkBytes(spark, f, path, cur, bucketsAt(spark, path, cur))
     (delta, delta.toDouble / (delta + bulk).toDouble)
   }
 
@@ -924,7 +877,7 @@ object LexIndex {
                              ids: DataFrame, touched: Seq[Long]): Long = {
     val cur = currentVersion(spark, path)
     if (cur == 0L) return 0L
-    val man = readManifest(spark, path, cur)
+    val man = bucketsAt(spark, path, cur)
     val live = touched.filter(man.contains).sorted
     if (live.isEmpty) return 0L
     val f = fsOf(spark, new Path(path))
@@ -966,7 +919,7 @@ object LexIndex {
     requireNoDelta(spark, path, "delete")
     val cur = currentVersion(spark, path)
     require(cur > 0L, s"no published index under $path — build first")
-    val man = readManifest(spark, path, cur)
+    val man = bucketsAt(spark, path, cur)
     if (man.isEmpty) return
     val victims = Versioned.gatedIds(
       ids.select(col("doc_id")).distinct(), maxBroadcastIds)
@@ -989,19 +942,19 @@ object LexIndex {
       remaining.join(dfreq, Seq("term")),
       statsRow(spark, oldSt.getLong(0) - gone.getLong(0),
         oldSt.getLong(1) - gone.getLong(1)))
-    publishManifest(spark, path, cur + 1L,
+    publishBuckets(spark, path, cur + 1L,
       (man -- touched.filterNot(written.contains)) ++ written.map(_ -> (cur + 1L)))
   }
 
   /** Spec accessors: the live sidecar / victim-bucket probe at the
     * current manifest. */
   private[graft] def openDocmap(spark: SparkSession, path: String): Option[DataFrame] =
-    openDocmap(spark, path, readManifest(spark, path, currentVersion(spark, path)))
+    openDocmap(spark, path, bucketsAt(spark, path, currentVersion(spark, path)))
 
   private[graft] def victimBuckets(spark: SparkSession, path: String,
                                    victims: DataFrame): DataFrame =
     victimBuckets(spark, path,
-      readManifest(spark, path, currentVersion(spark, path)),
+      bucketsAt(spark, path, currentVersion(spark, path)),
       broadcast(victims))
 
   /** The subset of `ids` that already carries postings — the day-end
@@ -1014,7 +967,7 @@ object LexIndex {
                                 ids: DataFrame): DataFrame = {
     val empty = ids.select(col("doc_id")).limit(0)
     if (currentVersion(spark, path) == 0L) return empty
-    val man = readManifest(spark, path, currentVersion(spark, path))
+    val man = bucketsAt(spark, path, currentVersion(spark, path))
     if (man.isEmpty) return empty
     val pairs = openDocmap(spark, path, man).getOrElse(
       readBuckets(spark, path, man, man.keys.toSeq)
@@ -1032,7 +985,7 @@ object LexIndex {
     * sidecar probe, or the postings fallback for pre-sidecar indexes. */
   def containsAny(spark: SparkSession, path: String, ids: DataFrame): Boolean = {
     if (currentVersion(spark, path) == 0L) return false
-    val man = readManifest(spark, path, currentVersion(spark, path))
+    val man = bucketsAt(spark, path, currentVersion(spark, path))
     if (man.isEmpty) return false
     !victimBuckets(spark, path, man,
       broadcast(ids.select(col("doc_id")).distinct())).isEmpty
@@ -1076,7 +1029,7 @@ object LexIndex {
    Lease.withLease(spark, path, "lexindex-compact") {
     val cur = currentVersion(spark, path)
     require(cur > 0L, s"no published index under $path — build first")
-    val man = readManifest(spark, path, cur)
+    val man = bucketsAt(spark, path, cur)
     val next = cur + 1L
     if (man.nonEmpty) {
       // no pre-shuffle here: writeVersion clusters on (tb, term,
@@ -1086,8 +1039,8 @@ object LexIndex {
         .select(col("term"), col("doc_id"), col("tf"), col("dl"), col("df"))
       val st = stats(spark, path)
       val written = writeVersion(spark, path, next, rows, st)
-      publishManifest(spark, path, next, written.map(_ -> next).toMap)
-    } else publishManifest(spark, path, next, Map.empty)
+      publishBuckets(spark, path, next, written.map(_ -> next).toMap)
+    } else publishBuckets(spark, path, next, Map.empty)
     // GC: every version directory and manifest below the one just
     // published is unreferenced now — collect what the grace allows
     gcLocked(spark, path, gcGraceMs)
@@ -1114,24 +1067,14 @@ object LexIndex {
     gcLocked(spark, path, graceMs)
   }
 
-  /** The supersession lower bound for grace aging: the live manifest
-    * file's mtime (see [[gc]]). `now` when unreadable — never ages. */
-  private def manifestMtime(f: FileSystem, path: String, cur: Long,
-                            now: Long): Long =
-    try f.getFileStatus(new Path(manifestDir(path), s"v=$cur.txt"))
-      .getModificationTime
-    catch { case _: java.io.IOException => now }
-
   /** [[gc]]'s body, for callers already holding the `path` lease. */
   private def gcLocked(spark: SparkSession, path: String, graceMs: Long): Unit = {
     val cur = currentVersion(spark, path)
     if (cur <= 0L) return
-    val man = readManifest(spark, path, cur)
+    val man = bucketsAt(spark, path, cur)
     val f = fsOf(spark, new Path(path))
     val now = System.currentTimeMillis()
-    val supersededBound = manifestMtime(f, path, cur, now)
-    def aged(st: org.apache.hadoop.fs.FileStatus): Boolean =
-      now - math.max(st.getModificationTime, supersededBound) >= graceMs
+    val aged = Versioned.agedRule(spark, path, cur, graceMs, now)
     // buckets + docmap are referenced at (version, bucket) grain — a
     // still-referenced v=W dir can hold superseded tb dirs, so sweep
     // per bucket and drop version dirs only once emptied
@@ -1144,27 +1087,20 @@ object LexIndex {
         for (bSt <- f.listStatus(vSt.getPath)
              if bSt.getPath.getName.startsWith("tb=")) {
           val b = bSt.getPath.getName.stripPrefix("tb=").toLong
-          if (!man.get(b).contains(v) && aged(bSt)) f.delete(bSt.getPath, true)
+          if (!man.get(b).contains(v) && aged(bSt.getModificationTime))
+            f.delete(bSt.getPath, true)
           else left += 1
         }
-        if (left == 0 && v != cur && aged(vSt)) f.delete(vSt.getPath, true)
+        if (left == 0 && v != cur && aged(vSt.getModificationTime))
+          f.delete(vSt.getPath, true)
       }
-    }
-    // stats + manifest files are referenced at the current version only
-    def sweepFlat(dir: String, keep: String, version: String => Boolean): Unit = {
-      val d = new Path(dir)
-      if (f.exists(d)) f.listStatus(d)
-        .filter { st =>
-          val n = st.getPath.getName
-          n != keep && version(n) && aged(st)
-        }
-        .foreach(st => f.delete(st.getPath, true))
     }
     sweepBucketed(bucketsDir(path))
     sweepBucketed(docmapDir(path))
-    sweepFlat(statsDir(path), s"v=$cur", _.startsWith("v="))
-    sweepFlat(manifestDir(path), s"v=$cur.txt",
-      n => n.startsWith("v=") && n.endsWith(".txt"))
+    // stats are referenced at the current version only; the shared
+    // sweep also collects superseded manifests and stranded publish tmps
+    Versioned.gcSweep(spark, path, cur, graceMs,
+      Seq((statsDir(path), "v=", (v: Long) => v == cur)))
     // RETIRED stream-delta generations: the reconcile's clear is a
     // pure generation bump (reader grace), so the physical sweep lives
     // here. The supersession bound for a retired generation is the
@@ -1202,15 +1138,14 @@ object LexIndex {
   def garbageShare(spark: SparkSession, path: String,
                    graceMs: Long = 0L): Double = {
     val cur = currentVersion(spark, path)
-    val man = readManifest(spark, path, cur)
+    val man = bucketsAt(spark, path, cur)
     val f = fsOf(spark, new Path(path))
     val root = new Path(bucketsDir(path))
     if (!f.exists(root)) return 0.0
-    val now = System.currentTimeMillis()
     // same supersession-bounded aging as [[gc]], so the policy's
     // eligible-bytes count matches what a sweep could reclaim now
-    val supersededBound =
-      if (cur > 0L) manifestMtime(f, path, cur, now) else now
+    val aged = Versioned.agedRule(spark, path, cur, graceMs,
+      System.currentTimeMillis())
     var live = 0L
     var dead = 0L
     for (vDir <- f.listStatus(root) if vDir.getPath.getName.startsWith("v=")) {
@@ -1220,8 +1155,7 @@ object LexIndex {
         val b = bDir.getPath.getName.stripPrefix("tb=").toLong
         val bytes = f.listStatus(bDir.getPath).map(_.getLen).sum
         if (man.get(b).contains(v)) live += bytes
-        else if (now - math.max(bDir.getModificationTime, supersededBound)
-            >= graceMs) dead += bytes
+        else if (aged(bDir.getModificationTime)) dead += bytes
       }
     }
     if (live + dead == 0L) 0.0 else dead.toDouble / (live + dead).toDouble
@@ -1406,7 +1340,7 @@ object LexIndex {
     * list is pinned with it). */
   def pinned(spark: SparkSession, path: String): Pinned = {
     val v = currentVersion(spark, path)
-    new Pinned(spark, path, v, readManifest(spark, path, v),
+    new Pinned(spark, path, v, bucketsAt(spark, path, v),
       deltaBatchPaths(spark, path))
   }
 

@@ -300,45 +300,16 @@ object PqIndex {
                    path: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val spark = embStream.sparkSession
-    val m0 = Versioned.current(spark, path)
-    Versioned.requireStreamAdoptable(spark, path, m0.epoch, checkpoint)
-    startCodeStream(spark, path, m0, checkpoint,
-      encode(embStream, idCol, vecCol, quantAt(spark, path, m0)))
-  }
-
-  /** [[appendStream]] for a stream that ALREADY CARRIES the coarse
-    * assignment (`idCol`, `vecCol`, `cid`) — the daily driver's
-    * one-assignment-two-stores contract: a standalone code table owns
-    * its coarse rule ([[encode]]'s), but a table PAIRED with a raw
-    * cosine index must append under the RAW index's cell assignment,
-    * or the two stores' layouts silently diverge doc by doc (the exact
-    * desync the driver's alignment gate exists to catch — its batch
-    * twin is [[appendAssigned]]). Same manifest pin, epoch/quantizer
-    * fences, and `b=batchId` replay-overwrite discipline. */
-  def appendStreamAssigned(assigned: DataFrame, idCol: String,
-                           vecCol: String, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = assigned.sparkSession
-    val m0 = Versioned.current(spark, path)
-    Versioned.requireStreamAdoptable(spark, path, m0.epoch, checkpoint)
-    startCodeStream(spark, path, m0, checkpoint,
-      encodeAssigned(assigned, idCol, vecCol, quantAt(spark, path, m0)))
-  }
-
-  /** The shared sink of the two code-append streams: fence-then-write
-    * under the index lease ([[VecIndex.appendStream]]'s rationale):
-    * maintenance mutations hold the same lease, so a compact/build/
-    * refresh can never publish between the manifest check and the
-    * write — a bare re-read would lose the batch silently (written
-    * into a retired directory, offsets then committed, never
-    * replayed). Bounded-patience acquire: a minutes-long maintenance
-    * pass holding the lease must not kill the stream — the batch
-    * waits, then the manifest check decides loudly. */
-  private def startCodeStream(spark: SparkSession, path: String,
-                              m0: Versioned.Man, checkpoint: String,
-                              coded: DataFrame)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    coded
+    val m0 = pinStreamAppend(spark, path, checkpoint)
+    // the sink fences then writes under the index lease
+    // ([[VecIndex.appendStream]]'s rationale): maintenance mutations hold
+    // the same lease, so a compact/build/refresh can never publish
+    // between the manifest check and the write — a bare re-read would
+    // lose the batch silently (written into a retired directory, offsets
+    // then committed, never replayed). Bounded-patience acquire: a
+    // minutes-long maintenance pass holding the lease must not kill the
+    // stream — the batch waits, then the manifest check decides loudly.
+    encode(embStream, idCol, vecCol, quantAt(spark, path, m0))
       .writeStream
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
@@ -347,6 +318,7 @@ object PqIndex {
         ()
       }
       .start()
+  }
 
   /** [[VecIndex.pinStreamAppend]]'s code-table twin: resolve the
     * manifest once and enforce the one-lineage-per-epoch rule — the
@@ -357,15 +329,6 @@ object PqIndex {
     Versioned.requireStreamAdoptable(spark, path, m0.epoch, checkpoint)
     m0
   }
-
-  /** Encode ONE already-coarse-assigned micro-batch against the pinned
-    * quantizer — the composite-ingest form of [[appendStreamAssigned]]'s
-    * stream transform, applied batch-side. */
-  private[graft] def encodeAssignedBatch(spark: SparkSession, path: String,
-                                         m0: Versioned.Man,
-                                         assigned: DataFrame, idCol: String,
-                                         vecCol: String): DataFrame =
-    encodeAssigned(assigned, idCol, vecCol, quantAt(spark, path, m0))
 
   /** The pinned quantizer row materialized as a DRIVER-LOCAL relation —
     * a composite ingest loads it ONCE at stream start (the per-batch
@@ -378,14 +341,15 @@ object PqIndex {
     spark.createDataFrame(java.util.Arrays.asList(q.collect(): _*), q.schema)
   }
 
-  /** [[encodeAssignedBatch]] against a pre-loaded ([[quantLocal]])
-    * quantizer row — the per-trigger form with no storage read. */
+  /** Encode ONE already-coarse-assigned micro-batch against a pre-loaded
+    * ([[quantLocal]]) quantizer row — the composite ingest's per-trigger
+    * form, with no storage read. */
   private[graft] def encodeAssignedLocal(assigned: DataFrame, idCol: String,
                                          vecCol: String,
                                          quant: DataFrame): DataFrame =
     encodeAssigned(assigned, idCol, vecCol, quant)
 
-  /** ONE micro-batch of the code-append streams: fence-then-write
+  /** ONE micro-batch of the code-append stream: fence-then-write
     * under the index lease ([[VecIndex.appendStreamBatch]]'s
     * rationale — maintenance mutations hold the same lease, so a
     * compact/build/refresh can never publish between the manifest
@@ -489,7 +453,7 @@ object PqIndex {
     // keep every cells version the live ownership chain references
     // (cell-pruned deletes — the delete-only refcount rule)
     val cellRefs = Versioned.referencedCellVersions(spark, path, m.base)
-    Versioned.gcSweep(spark, path, m, graceMs, Seq(
+    Versioned.gcSweep(spark, path, m.v, graceMs, Seq(
       (cellsDir(path), "v=", (v: Long) => cellRefs(v)),
       (deltaDir(path), "e=", (v: Long) => v == m.epoch),
       (quantDir(path), "v=", (v: Long) => v == m.cents)))

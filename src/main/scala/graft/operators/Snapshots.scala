@@ -5,6 +5,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
+import scala.collection.immutable.ArraySeq
 
 /** Sealed, versioned TRAINING-SET snapshots — the reproducibility
   * record a corpus owner cuts before every training run: "run T trained
@@ -12,11 +13,15 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
   * after thousands of daily steps have rewritten the live decision
   * table the run was actually fed from.
   *
-  * This is deliberately NOT the [[Versioned]] current-pointer protocol
-  * the index families share: an index has ONE live version and
-  * superseded debris; a snapshot history is APPEND-ONLY — every sealed
-  * version stays independently readable until an explicit retention
-  * decision retires it. Layout under `root`:
+  * [[Versioned]] owns the marker protocol this store commits through:
+  * every seal, revision, export and high-water marker below is listed
+  * ([[Versioned.numbered]]), committed by a tmp-write and atomic rename
+  * ([[Versioned.publishMarker]]; the high-water mark keeps its fixed
+  * `.tmp-hwm` name) and read back ([[Versioned.readEntries]]) there.
+  * What this store keeps is its own layout: an index has ONE
+  * live version and superseded debris, but a snapshot history is
+  * APPEND-ONLY — every sealed version stays independently readable
+  * until an explicit retention decision retires it. Layout under `root`:
   *
   *  - `snap/v=N/r=K/`   — the sealed rows (decision columns + the
   *    per-doc content fingerprint) at DATA REVISION K. r=0 is the
@@ -62,6 +67,7 @@ object Snapshots {
   private val RevDirName = "r=(\\d+)".r
   private val ManifestName = "r=(\\d+)\\.manifest".r
   private val BatchDirName = "batch=(-?\\d+)".r
+  private val HwmName = "\\.hwm-(\\d+)".r
 
   private def snapDir(root: String, v: Long) = s"$root/snap/v=$v"
   private def revDir(root: String, v: Long, k: Long) = s"$root/snap/v=$v/r=$k"
@@ -90,33 +96,14 @@ object Snapshots {
 
   /** Sealed versions, ascending. Only the seal marker counts — an
     * unsealed `snap/` dir is a crashed create, invisible here. */
-  def versions(spark: SparkSession, root: String): Seq[Long] = {
-    val dir = new Path(sealRoot(root))
-    val f = fsOf(spark, new Path(root))
-    if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir).map(_.getPath.getName)
-      .collect { case SealName(v) => v.toLong }.sorted.toSeq
-  }
-
-  /** Versions mid-retirement (gc phase 1 done, data not yet aged out).
-    * [[create]] must allocate PAST these: re-using a retired-in-grace
-    * number would overwrite data a pinned reader was promised, and its
-    * pending marker would schedule the fresh seal's data for deletion. */
-  private def retiredVersions(f: FileSystem, root: String): Seq[Long] = {
-    val dir = new Path(sealRoot(root))
-    if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir).map(_.getPath.getName)
-      .collect { case RetiredName(v) => v.toLong }.toSeq
-  }
+  def versions(spark: SparkSession, root: String): Seq[Long] =
+    Versioned.numbered(fsOf(spark, new Path(root)), new Path(sealRoot(root)),
+      SealName).map(_._1)
 
   /** Published data revisions of version `v`, ascending (markers only —
     * a data dir without its `.ok` is a torn redact, invisible). */
-  private def revisions(f: FileSystem, root: String, v: Long): Seq[Long] = {
-    val dir = new Path(snapDir(root, v))
-    if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir).map(_.getPath.getName)
-      .collect { case RevOkName(k) => k.toLong }.sorted.toSeq
-  }
+  private def revisions(f: FileSystem, root: String, v: Long): Seq[Long] =
+    Versioned.numbered(f, new Path(snapDir(root, v)), RevOkName).map(_._1)
 
   private def liveRevision(f: FileSystem, root: String, v: Long): Long =
     revisions(f, root, v).lastOption.getOrElse {
@@ -166,20 +153,9 @@ object Snapshots {
     * footer walk would miss rows living in other versions' dirs). */
   private def publishRevisionCounted(spark: SparkSession, root: String,
                                      v: Long, k: Long, tag: String,
-                                     n: Long): Unit = {
-    val f = fsOf(spark, new Path(root))
-    val tmp = new Path(snapDir(root, v), s".tmp-r=$k.ok")
-    val out = f.create(tmp, true)
-    try out.write(s"rows:$n\n$tag:${System.currentTimeMillis()}\n"
-      .getBytes("UTF-8"))
-    finally out.close()
-    // a torn predecessor may have left this exact marker name mid-crash
-    // only if the commit already happened — never reachable live (the
-    // root lease serializes mutators); same-name replacement is legal
-    f.delete(revOk(root, v, k), false)
-    require(Lease.atomicRename(f, tmp, revOk(root, v, k)),
-      s"revision publish failed: $tmp -> ${revOk(root, v, k)}")
-  }
+                                     n: Long): Unit =
+    Versioned.publishMarker(fsOf(spark, new Path(root)), revOk(root, v, k),
+      Seq("rows" -> n, tag -> System.currentTimeMillis()))
 
   // ----------------------------------------- incremental (manifest) seals
 
@@ -199,13 +175,14 @@ object Snapshots {
 
   private def readManifestRefs(f: FileSystem, root: String, v: Long,
                                k: Long): Seq[BatchRef] =
-    markerLines(f, manifestPath(root, v, k)).filter(_.nonEmpty).map { line =>
-      val kv = line.split("\\s+").map { tok =>
-        val Array(key, value) = tok.split("=", 2); key -> value
-      }.toMap
-      BatchRef(kv("batch").toLong, kv("v").toLong, kv("r").toLong,
-        kv("rows").toLong, kv("sum").toLong)
-    }
+    Versioned.readLines(f, manifestPath(root, v, k)).filter(_.nonEmpty)
+      .map { line =>
+        val kv = line.split("\\s+").map { tok =>
+          val Array(key, value) = tok.split("=", 2); key -> value
+        }.toMap
+        BatchRef(kv("batch").toLong, kv("v").toLong, kv("r").toLong,
+          kv("rows").toLong, kv("sum").toLong)
+      }
 
   /** The manifest file is plain content under the unpublished revision —
     * the `r=K.ok` marker rename is what commits it, so a torn write is
@@ -277,7 +254,7 @@ object Snapshots {
   private def batchSums(rows: DataFrame,
                         batchCol: String): Map[Long, (Long, Long)] = {
     val dataCols = rows.columns.filterNot(_ == batchCol).sorted
-    val h = xxhash64(dataCols.map(col): _*)
+    val h = xxhash64(ArraySeq.unsafeWrapArray(dataCols.map(col)): _*)
     val m32 = lit(4294967296L) // 2^32
     rows.groupBy(col(batchCol).cast(LongType).as("__b"))
       .agg(count(lit(1)).as("__n"),
@@ -307,43 +284,26 @@ object Snapshots {
   private def allocVersion(spark: SparkSession, f: FileSystem,
                            root: String): Long = {
     val dir = new Path(sealRoot(root))
-    def hwmFiles: Seq[(Long, Path)] =
-      if (!f.exists(dir)) Seq.empty
-      else f.listStatus(dir).map(_.getPath).toSeq.flatMap { p =>
-        val suf = p.getName.stripPrefix(".hwm-")
-        if (p.getName.startsWith(".hwm-") && suf.nonEmpty &&
-          suf.forall(_.isDigit)) Some(suf.toLong -> p)
-        else None
-      }
-    val fromDisk = (versions(spark, root) ++ retiredVersions(f, root))
-      .foldLeft(0L)(math.max)
-    val v = math.max(fromDisk, hwmFiles.map(_._1).foldLeft(0L)(math.max)) + 1L
-    f.mkdirs(dir)
-    val tmp = new Path(dir, ".tmp-hwm")
-    val out = f.create(tmp, true)
-    try out.write(s"$v\n".getBytes("UTF-8"))
-    finally out.close()
-    require(Lease.atomicRename(f, tmp, new Path(dir, s".hwm-$v")),
-      s"high-water publish failed: $tmp -> .hwm-$v")
-    for ((w, p) <- hwmFiles if w < v) f.delete(p, false)
+    val hwmFiles = Versioned.numbered(f, dir, HwmName)
+    // versions mid-retirement (gc phase 1 done, data not yet aged out)
+    // count too: re-using a retired-in-grace number would overwrite data
+    // a pinned reader was promised, and its pending marker would
+    // schedule the fresh seal's data for deletion
+    val v = (versions(spark, root) ++
+      Versioned.numbered(f, dir, RetiredName).map(_._1) ++ hwmFiles.map(_._1))
+      .foldLeft(0L)(math.max) + 1L
+    // the one fixed tmp name: a crashed bump strands no per-number debris
+    Lease.commitFile(f, new Path(dir, ".tmp-hwm"), new Path(dir, s".hwm-$v"),
+      s"$v\n")
+    for ((w, st) <- hwmFiles if w < v) f.delete(st.getPath, false)
     v
   }
 
   /** The seal-marker commit shared by [[create]]/[[createIncremental]]:
     * the atomic rename IS the version's single commit point. */
-  private def sealVersion(f: FileSystem, root: String, v: Long): Unit = {
-    f.mkdirs(new Path(sealRoot(root)))
-    val tmp = new Path(sealRoot(root), s".tmp-v=$v.txt")
-    val out = f.create(tmp, true)
-    try out.write(s"created:${System.currentTimeMillis()}\n"
-      .getBytes("UTF-8"))
-    finally out.close()
-    // a retire/replay cycle may have left this exact name before —
-    // same-version debris is legal to replace (see scaladoc)
-    f.delete(sealFile(root, v), false)
-    require(Lease.atomicRename(f, tmp, sealFile(root, v)),
-      s"snapshot seal failed: $tmp -> ${sealFile(root, v)}")
-  }
+  private def sealVersion(f: FileSystem, root: String, v: Long): Unit =
+    Versioned.publishMarker(f, sealFile(root, v),
+      Seq("created" -> System.currentTimeMillis()))
 
   /** Seal `rows` as the next version INCREMENTALLY: physical copies are
     * written only for batches whose content CHANGED since the previous
@@ -519,13 +479,8 @@ object Snapshots {
     require(f.exists(sealFile(root, v)),
       s"snapshot v=$v at $root is not sealed")
     legacySwapRepair(spark, f, root, v)
-    def rowsLine(p: Path): Option[Long] = {
-      val in = f.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .collectFirst { case s if s.startsWith("rows:") =>
-          s.stripPrefix("rows:").toLong }
-      finally in.close()
-    }
+    def rowsLine(p: Path): Option[Long] =
+      Versioned.readEntries(f, p).get("rows").map(_.toLong)
     revisions(f, root, v).lastOption match {
       case Some(k) => rowsLine(revOk(root, v, k)).getOrElse(0L)
       case None =>
@@ -835,12 +790,8 @@ object Snapshots {
   private def shardOk(root: String, v: Long, k: Long) =
     new Path(shardsVDir(root, v), s"r=$k.ok")
 
-  private def shardRevisions(f: FileSystem, root: String, v: Long): Seq[Long] = {
-    val dir = new Path(shardsVDir(root, v))
-    if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir).map(_.getPath.getName)
-      .collect { case RevOkName(k) => k.toLong }.sorted.toSeq
-  }
+  private def shardRevisions(f: FileSystem, root: String, v: Long): Seq[Long] =
+    Versioned.numbered(f, new Path(shardsVDir(root, v)), RevOkName).map(_._1)
 
   /** Row count across a directory's parquet files (recursing into
     * partition subdirs) from the FOOTERS alone — metadata-only, one
@@ -904,15 +855,9 @@ object Snapshots {
         .write.mode("overwrite").partitionBy("shard").parquet(out)
       val n = footerRowsDeep(f, new Path(out),
         spark.sparkContext.hadoopConfiguration)
-      val tmp = new Path(shardsVDir(root, v), s".tmp-r=$k.ok")
-      val o = f.create(tmp, true)
-      try o.write((s"rows:$n\nctx:$ctx\nchunk:$chunk\nshards:$shards\n" +
-        s"groups:$groups\nexported:${System.currentTimeMillis()}\n")
-        .getBytes("UTF-8"))
-      finally o.close()
-      f.delete(shardOk(root, v, k), false)
-      require(Lease.atomicRename(f, tmp, shardOk(root, v, k)),
-        s"shard export publish failed: $tmp -> ${shardOk(root, v, k)}")
+      Versioned.publishMarker(f, shardOk(root, v, k), Seq("rows" -> n,
+        "ctx" -> ctx.toLong, "chunk" -> chunk.toLong, "shards" -> shards.toLong,
+        "groups" -> groups.toLong, "exported" -> System.currentTimeMillis()))
     }
 
   /** Read sealed version `v`'s shard manifest. Refuses when no export
@@ -944,16 +889,6 @@ object Snapshots {
     revs.nonEmpty && revs.last == liveRevision(f, root, v)
   }
 
-  private def markerLines(f: FileSystem, p: Path): List[String] = {
-    val in = f.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-    finally in.close()
-  }
-
-  private def markerParam(lines: List[String], key: String, dflt: Int): Int =
-    lines.collectFirst { case s if s.startsWith(s"$key:") =>
-      s.stripPrefix(s"$key:").trim.toInt }.getOrElse(dflt)
-
   /** Per-(lang, shard) packing health of sealed `v`'s shard export —
     * document/chunk/token counts, bin count, and the bin-fill share
     * (`n_tokens / (n_bins · ctx)`, the padding-waste complement): the
@@ -967,8 +902,8 @@ object Snapshots {
     val f = fsOf(spark, new Path(root))
     val m = openShards(spark, root, v)
     val k = shardRevisions(f, root, v).last
-    val ctx = markerParam(markerLines(f, shardOk(root, v, k)), "ctx",
-      ShardExport.DefaultCtx)
+    val ctx = Versioned.readEntries(f, shardOk(root, v, k)).get("ctx")
+      .fold(ShardExport.DefaultCtx)(_.toInt)
     m.groupBy(col("lang"), col("shard").cast(IntegerType).as("shard"))
       .agg(countDistinct(col("doc_id")).as("n_docs"),
         count(lit(1)).as("n_chunks"),
@@ -1011,8 +946,8 @@ object Snapshots {
     for (v <- versions(spark, root)) {
       val revs = shardRevisions(f, root, v)
       if (revs.nonEmpty && revs.last != liveRevision(f, root, v)) {
-        val lines = markerLines(f, shardOk(root, v, revs.last))
-        def p(key: String, dflt: Int): Int = markerParam(lines, key, dflt)
+        val params = Versioned.readEntries(f, shardOk(root, v, revs.last))
+        def p(key: String, dflt: Int): Int = params.get(key).fold(dflt)(_.toInt)
         // `docs` here is forget's (doc_id, text) contract — the lang
         // each surviving doc was packed under comes back from the STALE
         // manifest itself (text is immutable under a seal, so a doc

@@ -691,7 +691,7 @@ object VecIndex {
     // every one of them is live data, not garbage (delete-only
     // refcount, the snapshot store's rule)
     val cellRefs = Versioned.referencedCellVersions(spark, path, m.base)
-    Versioned.gcSweep(spark, path, m, graceMs, Seq(
+    Versioned.gcSweep(spark, path, m.v, graceMs, Seq(
       (cellsDir(path), "v=", (v: Long) => cellRefs(v)),
       (deltaDir(path), "e=", (v: Long) => v == m.epoch),
       (centsDir(path), "v=", (v: Long) => v == m.cents)))

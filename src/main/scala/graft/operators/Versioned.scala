@@ -1,25 +1,40 @@
 package graft.operators
 
 import graft.sources.DriverParquet
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ArraySeq
+import scala.util.matching.Regex
 
-/** The versioned-manifest publication protocol shared by the
-  * vector-family indexes ([[VecIndex]], [[PqIndex]]) — the [[LexIndex]]
-  * discipline factored for layouts whose bulk side is rewritten whole:
-  * mutations write fresh `v=N+1` directories the live index never
-  * references, then publish ONE manifest file via an atomic
-  * same-directory rename. A crash before the rename leaves invisible
-  * debris the replay overwrites; readers resolve the manifest once and
-  * get pinned snapshots over immutable paths.
+/** The engine's one commit-marker protocol. Every store that DailyDriver
+  * keeps crash-atomic commits through the numbered markers this object
+  * names, lists, writes, parses and ages:
   *
-  * Manifest content is the (base, epoch, cents) triple: the bulk cells
-  * version (0 = none), the current append epoch, and the quantizer
-  * version (0 = none — VecIndex's coarse centroids, PqIndex's
-  * coarse+codebook row). The unpublished default is epoch 1, so a
-  * pure-stream index has a well-defined append target without a
-  * manifest write a streaming sink could not make transactional.
+  *  - a marker is a small `key:value`-lines file whose name carries a
+  *    number (`v=N.txt`, `r=K.ok`, ...); the highest-numbered marker
+  *    present is the live one ([[numbered]]);
+  *  - it is written to `.tmp-<name>` beside itself and renamed in by
+  *    [[Lease.commitFile]] — one atomic same-directory move, the only
+  *    step that changes what readers see ([[publishMarker]]), so a crash
+  *    before it leaves invisible debris the replay overwrites;
+  *  - its entries are read back by [[readEntries]];
+  *  - superseded markers, stranded `.tmp-` files and the version
+  *    directories nothing references are swept once aged from the live
+  *    marker's mtime ([[agedRule]], [[gcSweep]]).
+  *
+  * The index stores keep their current version in `path/manifest/v=N.txt`
+  * ([[currentVersion]], [[entriesAt]], [[publishEntries]]): [[LexIndex]]
+  * stores its bucket → version map there; [[VecIndex]] and [[PqIndex]],
+  * whose bulk side is rewritten whole, store the (base, epoch, cents)
+  * triple ([[current]], [[publish]]) — the bulk cells version (0 =
+  * none), the current append epoch, and the quantizer version (0 = none
+  * — VecIndex's coarse centroids, PqIndex's coarse+codebook row). The
+  * unpublished default is epoch 1, so a pure-stream index has a
+  * well-defined append target without a manifest write a streaming sink
+  * could not make transactional. [[Snapshots]] keeps its own seal,
+  * revision and shard-export layout but commits, lists and reads those
+  * markers through the same primitives.
   */
 private[operators] object Versioned {
 
@@ -48,57 +63,87 @@ private[operators] object Versioned {
     if (once.count() <= maxBroadcast) broadcast(once) else once
   }
 
-  private val ManifestName = "v=(\\d+)\\.txt".r
+  // ------------------------------------------------- numbered markers
 
-  def manifestDir(path: String): String = s"$path/manifest"
+  /** The entries of `dir` whose names match `name` (one digits group),
+    * as (number, status) ascending by number; empty when `dir` is
+    * absent. Names that do not match are skipped, never parsed. */
+  def numbered(f: FileSystem, dir: Path, name: Regex): Seq[(Long, FileStatus)] =
+    if (!f.exists(dir)) Seq.empty
+    else f.listStatus(dir).toSeq.flatMap(st => st.getPath.getName match {
+      case name(n) => Some(n.toLong -> st)
+      case _ => None
+    }).sortBy(_._1)
 
-  def currentVersion(spark: SparkSession, path: String): Long = {
-    val dir = new Path(manifestDir(path))
-    val f = fsOf(spark, new Path(path))
-    if (!f.exists(dir)) 0L
-    else f.listStatus(dir).map(_.getPath.getName)
-      .collect { case ManifestName(v) => v.toLong }
-      .foldLeft(0L)(math.max)
+  /** Marker bytes for `entries`: one `key:value` line each, each line
+    * newline-terminated (no entries = a lone newline). */
+  def entryText(entries: Seq[(String, Long)]): String =
+    entries.map { case (k, v) => s"$k:$v" }.mkString("", "\n", "\n")
+
+  /** The lines of marker (or manifest) file `p`. */
+  def readLines(f: FileSystem, p: Path): List[String] = {
+    val in = f.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+    finally in.close()
   }
+
+  /** The `key:value` lines of marker `p` (blank and colon-free lines
+    * skipped; the value is everything after the first colon). */
+  def readEntries(f: FileSystem, p: Path): Map[String, String] =
+    readLines(f, p).flatMap(line => line.split(":", 2) match {
+      case Array(k, v) => Some(k -> v.trim)
+      case _ => None
+    }).toMap
+
+  /** Commit marker `dst` with `entries` via its `.tmp-<name>` sibling. */
+  def publishMarker(f: FileSystem, dst: Path, entries: Seq[(String, Long)]): Unit =
+    Lease.commitFile(f, new Path(dst.getParent, s".tmp-${dst.getName}"), dst,
+      entryText(entries))
+
+  // ------------------------------------------------- index manifests
+
+  private val ManifestName = "v=(\\d+)\\.txt".r
+  private val TmpManifestName = "\\.tmp-v=(\\d+)\\.txt".r
+
+  private def manifestDir(path: String): String = s"$path/manifest"
+  private def manifestFile(path: String, v: Long): Path =
+    new Path(manifestDir(path), s"v=$v.txt")
+
+  /** The published version the index currently reads at (0 = no
+    * successful publish yet). */
+  def currentVersion(spark: SparkSession, path: String): Long =
+    numbered(fsOf(spark, new Path(path)), new Path(manifestDir(path)), ManifestName)
+      .lastOption.fold(0L)(_._1)
+
+  /** Manifest `v`'s entries; empty for `v` = 0. */
+  def entriesAt(spark: SparkSession, path: String, v: Long): Map[String, String] =
+    if (v == 0L) Map.empty
+    else readEntries(fsOf(spark, new Path(path)), manifestFile(path, v))
+
+  /** Publish `entries` as manifest version `v` — the store's one atomic
+    * step ([[publishMarker]]). */
+  def publishEntries(spark: SparkSession, path: String, v: Long,
+                     entries: Seq[(String, Long)]): Unit =
+    publishMarker(fsOf(spark, new Path(path)), manifestFile(path, v), entries)
 
   def current(spark: SparkSession, path: String): Man = {
     val v = currentVersion(spark, path)
-    if (v == 0L) return Man(0L, 0L, 1L, 0L)
-    val in = fsOf(spark, new Path(path)).open(new Path(manifestDir(path), s"v=$v.txt"))
-    val kv =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .filter(_.nonEmpty)
-        .map { line =>
-          val Array(k, value) = line.split(":")
-          k -> value.toLong
-        }.toMap
-      finally in.close()
-    Man(v, kv.getOrElse("base", 0L), kv.getOrElse("epoch", 1L),
-      kv.getOrElse("cents", 0L))
+    val kv = entriesAt(spark, path, v)
+    def at(k: String, dflt: Long) = kv.get(k).fold(dflt)(_.toLong)
+    Man(v, at("base", 0L), at("epoch", 1L), at("cents", 0L))
   }
 
-  /** Publish manifest version `v`: write to a dot-prefixed temp name in
-    * the manifest directory, then rename — one atomic same-directory
-    * move, the only step that changes what readers see. The rename goes
-    * through [[Lease.atomicRename]]: this is THE atomic step of every
-    * index family, and on `file:` URIs Hadoop's local rename falls back
-    * to copy+delete when `renameTo` fails — the exact hole the lease
-    * layer routes around with NIO `ATOMIC_MOVE` (one rename(2), never a
-    * copy a reader could observe half-written). */
   def publish(spark: SparkSession, path: String, v: Long, base: Long,
-              epoch: Long, cents: Long): Unit = {
-    val f = fsOf(spark, new Path(path))
-    val dir = new Path(manifestDir(path))
-    f.mkdirs(dir)
-    val tmp = new Path(dir, s".tmp-v=$v.txt")
-    val out = f.create(tmp, true)
-    try out.write(s"base:$base\nepoch:$epoch\ncents:$cents\n".getBytes("UTF-8"))
-    finally out.close()
-    val dst = new Path(dir, s"v=$v.txt")
-    f.delete(dst, false) // only present if THIS version was already published
-    require(Lease.atomicRename(f, tmp, dst),
-      s"manifest publish failed: $tmp -> $dst")
-  }
+              epoch: Long, cents: Long): Unit =
+    publishEntries(spark, path, v,
+      Seq("base" -> base, "epoch" -> epoch, "cents" -> cents))
+
+  /** The live manifest `v`'s mtime — the supersession bound of every
+    * version it retired; None when unreadable. */
+  def manifestMtime(spark: SparkSession, path: String, v: Long): Option[Long] =
+    try Some(fsOf(spark, new Path(path)).getFileStatus(manifestFile(path, v))
+      .getModificationTime)
+    catch { case _: java.io.IOException => None }
 
   /** The families' shared on-disk layout: celled bulk versions and
     * LSM delta epochs. Owning the names here keeps the two vector
@@ -126,23 +171,13 @@ private[operators] object Versioned {
     val f = fsOf(spark, new Path(path))
     val p = new Path(cellsPath(path, v), CellManifest)
     if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .filter(_.nonEmpty).map { line =>
-          val Array(c, o) = line.split(":")
-          c.toLong -> o.toLong
-        }.toMap)
-      finally in.close()
-    }
+    else Some(readEntries(f, p).map { case (c, o) => c.toLong -> o.toLong })
   }
 
-  private def listCids(f: FileSystem, dir: String): Seq[Long] = {
-    val p = new Path(dir)
-    if (!f.exists(p)) Seq.empty
-    else f.listStatus(p).map(_.getPath.getName).toSeq
-      .filter(_.startsWith("cid=")).map(_.stripPrefix("cid=").toLong)
-  }
+  private val CidName = "cid=(-?\\d+)".r
+
+  private def listCids(f: FileSystem, dir: String): Seq[Long] =
+    numbered(f, new Path(dir), CidName).map(_._1)
 
   /** The cid→owner map of cells version `v`, resolved: the sidecar when
     * present, else (FULL version) every physically present cid dir,
@@ -157,9 +192,8 @@ private[operators] object Versioned {
     val dir = new Path(cellsPath(path, v))
     f.mkdirs(dir)
     val out = f.create(new Path(dir, CellManifest), true)
-    try out.write(owners.toSeq.sorted
-      .map { case (c, o) => s"$c:$o" }.mkString("", "\n", "\n")
-      .getBytes("UTF-8"))
+    try out.write(entryText(owners.toSeq.sorted.map { case (c, o) =>
+      c.toString -> o }).getBytes("UTF-8"))
     finally out.close()
   }
 
@@ -378,7 +412,8 @@ private[operators] object Versioned {
         .filter(_.getName.startsWith("b="))
     if (bDirs.isEmpty) None
     else Some(DriverParquet.read(spark).option("basePath", dir)
-      .load(bDirs.map(_.toString).sorted: _*).select(col(idCol)))
+      .load(ArraySeq.unsafeWrapArray(bDirs.map(_.toString).sorted): _*)
+      .select(col(idCol)))
   }
 
   /** Whether any of `ids` appears in an opened index — the
@@ -517,44 +552,30 @@ private[operators] object Versioned {
     * Returns the predicate over a candidate's mtime. */
   def agedRule(spark: SparkSession, path: String, curV: Long,
                graceMs: Long, now: Long): Long => Boolean = {
-    val bound =
-      try fsOf(spark, new Path(path))
-        .getFileStatus(new Path(manifestDir(path), s"v=$curV.txt"))
-        .getModificationTime
-      catch { case _: java.io.IOException => now }
+    val bound = manifestMtime(spark, path, curV).getOrElse(now)
     (mtime: Long) => now - math.max(mtime, bound) >= graceMs
   }
 
-  /** Sweep a `prefix`-versioned directory family, deleting entries the
-    * keep-rule rejects once aged; then sweep superseded manifest files
-    * themselves. */
-  def gcSweep(spark: SparkSession, path: String, m: Man, graceMs: Long,
+  /** Sweep each `prefix`-numbered directory family (`prefix` then
+    * digits), deleting entries the keep-rule rejects once aged; then
+    * sweep superseded manifest files themselves, and the `.tmp-v=N.txt`
+    * a publish that crashed between its tmp write and its rename
+    * strands: a same-version replay overwrites it, but a crashed
+    * version-N publish followed by a successful N+1 never revisits the
+    * name (the aged rule keeps an in-flight publish's seconds-old tmp
+    * safe, and gc runs under the writer lease so no publish races the
+    * sweep). */
+  def gcSweep(spark: SparkSession, path: String, curV: Long, graceMs: Long,
               families: Seq[(String, String, Long => Boolean)]): Unit = {
     val f = fsOf(spark, new Path(path))
-    val now = System.currentTimeMillis()
-    val aged = agedRule(spark, path, m.v, graceMs, now)
-    for ((dir, prefix, keep) <- families) {
-      val d = new Path(dir)
-      if (f.exists(d))
-        for (st <- f.listStatus(d) if st.getPath.getName.startsWith(prefix)) {
-          val v = st.getPath.getName.stripPrefix(prefix).toLong
-          if (!keep(v) && aged(st.getModificationTime))
-            f.delete(st.getPath, true)
-        }
-    }
-    val md = new Path(manifestDir(path))
-    if (f.exists(md)) for (st <- f.listStatus(md)) st.getPath.getName match {
-      case ManifestName(v) if v.toLong != m.v &&
-        aged(st.getModificationTime) => f.delete(st.getPath, false)
-      // a publish that crashed between the tmp write and the rename
-      // strands `.tmp-v=N.txt`: a same-version replay overwrites it,
-      // but a crashed version-N publish followed by a successful N+1
-      // never revisits the name — sweep the aged debris here (the aged
-      // rule keeps an in-flight publish's seconds-old tmp safe, and gc
-      // runs under the writer lease so no publish races the sweep)
-      case n if n.startsWith(".tmp-v=") && n.endsWith(".txt") &&
-        aged(st.getModificationTime) => f.delete(st.getPath, false)
-      case _ => ()
-    }
+    val aged = agedRule(spark, path, curV, graceMs, System.currentTimeMillis())
+    def sweep(dir: String, name: Regex, gone: Long => Boolean): Unit =
+      for ((v, st) <- numbered(f, new Path(dir), name)
+           if gone(v) && aged(st.getModificationTime))
+        f.delete(st.getPath, true)
+    for ((dir, prefix, keep) <- families)
+      sweep(dir, s"${Regex.quote(prefix)}(\\d+)".r, v => !keep(v))
+    sweep(manifestDir(path), ManifestName, _ != curV)
+    sweep(manifestDir(path), TmpManifestName, _ => true)
   }
 }

@@ -3,6 +3,7 @@ package graft.pipelines
 import graft.sources.DriverParquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ArraySeq
 
 /** The daily corpus-curation driver as a STORAGE protocol — the
   * composition DailyDriverSpec proves, packaged as the two calls a
@@ -847,7 +848,8 @@ object DailyDriver {
         .localCheckpoint() // read twice: batch census + staged write
       val touched = dB.select(col("batch")).distinct()
         .collect().map(_.getLong(0))
-      val staged = prevB.filter(col("batch").isin(touched: _*))
+      val staged = prevB.filter(
+        col("batch").isin(ArraySeq.unsafeWrapArray(touched): _*))
         .join(d.select(col("doc_id")), Seq("doc_id"), "left_anti")
         .unionByName(dB)
       PartitionSwap.swap(spark, decisionsDir(dir)) { stage =>

@@ -13,7 +13,6 @@ import org.apache.spark.sql.functions._
   * batches (the fresh-checkpoint lineage shape) converge by the
   * lowest-batch read dedup; the day-end fold (merge + clear) lands the
   * same rows the delta served. */
-@graft.Slow
 class LexIndexDeltaSpec extends SparkSpecBase {
 
   private def docsAt(d: String): DataFrame =

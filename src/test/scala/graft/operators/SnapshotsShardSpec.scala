@@ -8,7 +8,6 @@ import org.apache.spark.sql.functions._
   * to the snapshot's DATA revision, the staleness fence after a
   * redaction, the params-preserving re-export, coverage refusal, and
   * gc of superseded exports. */
-@graft.Slow
 class SnapshotsShardSpec extends SparkSpecBase {
   import spark.implicits._
 

@@ -8,7 +8,8 @@ import org.apache.hadoop.fs.Path
   * (a reader never parses a torn manifest), and a publish that CRASHED
   * between writing its `.tmp-v=N.txt` and the rename leaves debris that
   * gc sweeps once aged — while a fresh (possibly in-flight) tmp and the
-  * current manifest survive every sweep.
+  * current manifest survive every sweep, under the shared sweep and
+  * under [[LexIndex.gc]], whose manifest publishes through it.
   */
 class VersionedSpec extends SparkSpecBase {
 
@@ -37,15 +38,35 @@ class VersionedSpec extends SparkSpecBase {
       .setLastModified(System.currentTimeMillis() - 120000L))
     val m = Versioned.current(spark, dir)
     assert(m.v == 3L && m.base == 3L && m.epoch == 2L)
-    Versioned.gcSweep(spark, dir, m, graceMs = 60000L, families = Seq.empty)
+    Versioned.gcSweep(spark, dir, m.v, graceMs = 60000L, families = Seq.empty)
     assert(!orphan.exists(), "aged crashed-publish tmp debris not swept")
     assert(fresh.exists(), "sweep deleted a fresh in-flight publish tmp")
     assert(Versioned.current(spark, dir).v == 3L,
       "sweep perturbed the current manifest")
     // grace 0 = the offline rule: everything superseded goes at once
-    Versioned.gcSweep(spark, dir, m, graceMs = 0L, families = Seq.empty)
+    Versioned.gcSweep(spark, dir, m.v, graceMs = 0L, families = Seq.empty)
     assert(!fresh.exists(), "offline sweep left tmp debris")
     assert(new java.io.File(s"$dir/manifest/v=3.txt").exists())
+
+    // the same debris under a LexIndex, whose bucket manifest publishes
+    // through the same protocol: LexIndex.gc must sweep it too
+    import spark.implicits._
+    val lex = tempDir("versioned-lex-tmp")
+    LexIndex.build(Seq((1L, "alpha", 2L), (2L, "beta", 1L))
+      .toDF("doc_id", "term", "tf"), lex)
+    val lexOrphan = new java.io.File(s"$lex/manifest/.tmp-v=2.txt")
+    java.nio.file.Files.write(lexOrphan.toPath, "7:2\n".getBytes("UTF-8"))
+    val lexFresh = new java.io.File(s"$lex/manifest/.tmp-v=3.txt")
+    java.nio.file.Files.write(lexFresh.toPath, "7:3\n".getBytes("UTF-8"))
+    assert(lexOrphan.setLastModified(System.currentTimeMillis() - 120000L))
+    assert(new java.io.File(s"$lex/manifest/v=1.txt")
+      .setLastModified(System.currentTimeMillis() - 120000L))
+    LexIndex.gc(spark, lex, graceMs = 60000L)
+    assert(!lexOrphan.exists(), "LexIndex.gc left aged crashed-publish tmp debris")
+    assert(lexFresh.exists(), "LexIndex.gc deleted a fresh in-flight publish tmp")
+    assert(LexIndex.currentVersion(spark, lex) == 1L)
+    assert(LexIndex.openPostings(spark, lex).count() == 2L,
+      "LexIndex.gc perturbed the live index")
   }
 
   test("publish hammer: concurrent readers never observe a torn manifest") {

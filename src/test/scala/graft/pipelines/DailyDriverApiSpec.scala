@@ -11,7 +11,6 @@ import org.apache.spark.sql.functions._
   * additionally prove the INDEX MAINTENANCE — day 2's arrivals must
   * pair against day 1's candidates through the appended signatures,
   * or components forming across the day-1/day-2 boundary are lost. */
-@graft.Slow
 class DailyDriverApiSpec extends SparkSpecBase {
   private val sf = "/root/testdata/sf0.001"
   private val cfg = Curation.Config(minQuality = 2.95)

@@ -16,7 +16,6 @@ import org.apache.spark.sql.functions._
   *  - a second concurrent writer FAILS FAST on the lease and mutates
   *    nothing; a CRASHED writer's stale lease is taken over.
   */
-@graft.Slow
 class DailyDriverCrashSpec extends SparkSpecBase {
   private val sf = "/root/testdata/sf0.001"
   private val cfg = Curation.Config(minQuality = 2.95)

@@ -13,7 +13,6 @@ import org.apache.spark.sql.functions._
   * crash story: a forget torn before its decision swap replays to the
   * same bytes.
   */
-@graft.Slow
 class DailyDriverForgetSpec extends SparkSpecBase {
   private val sf = "/root/testdata/sf0.001"
   private val cfg = Curation.Config(minQuality = 2.95)

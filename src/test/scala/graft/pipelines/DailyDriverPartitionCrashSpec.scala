@@ -13,7 +13,6 @@ import org.apache.spark.sql.functions._
   * complete new table at the next open, and a replayed step must
   * converge byte-identically whether it crashed before the marker
   * (recompute) or after the full publish (probe-cost no-op). */
-@graft.Slow
 class DailyDriverPartitionCrashSpec extends SparkSpecBase {
   private val sf = "/root/testdata/sf0.001"
   private val cfg = Curation.Config(minQuality = 2.95)

@@ -12,7 +12,6 @@ import org.apache.spark.sql.functions._
   * "model" here halves the dimension (64 → 32, reversed) — the hard
   * case, since any old-space row mixing into a read would break
   * every dot product. */
-@graft.Slow
 class DailyDriverReembedSpec extends SparkSpecBase {
   private val sf = "/root/testdata/sf0.001"
   private val cfg = Curation.Config(minQuality = 2.95)

@@ -7,7 +7,6 @@ import org.apache.spark.sql.functions._
   * sweep: self-consistent at the truth combo, bitwise-exact at
   * ExhaustiveRerank, and above the recall floor at the production
   * default depth. */
-@graft.Slow
 class DailyDriverReportSpec extends SparkSpecBase {
   private val sf = "/root/testdata/sf0.001"
   private val cfg = Curation.Config(minQuality = 2.95)

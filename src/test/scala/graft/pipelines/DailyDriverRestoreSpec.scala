@@ -11,7 +11,6 @@ import org.apache.spark.sql.functions._
   * days must reproduce the original history, a torn restore replays
   * to the same bytes, and a live vector index without embeddings is
   * refused. */
-@graft.Slow
 class DailyDriverRestoreSpec extends SparkSpecBase {
   private val sf = "/root/testdata/sf0.001"
   private val cfg = Curation.Config(minQuality = 2.95)

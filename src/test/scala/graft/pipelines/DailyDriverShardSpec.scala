@@ -8,7 +8,6 @@ import org.apache.spark.sql.functions._
   * version's kept docs as the packed, token-balanced shard manifest;
   * later steps never perturb the sealed export; a forget that redacts
   * the version re-exports it over the survivors automatically. */
-@graft.Slow
 class DailyDriverShardSpec extends SparkSpecBase {
   private val sf = "/root/testdata/sf0.001"
   private val cfg = Curation.Config(minQuality = 2.95)

@@ -10,7 +10,6 @@ import org.apache.spark.sql.functions._
   * directory listing is the whole cost and nothing is rewritten; above
   * it the re-lay is a pure re-layout (row identity) that compacts each
   * batch partition to one file. */
-@graft.Slow
 class DailyDriverSigGateSpec extends SparkSpecBase {
   private val sf = "/root/testdata/sf0.001"
   private val cfg = Curation.Config(minQuality = 2.95)

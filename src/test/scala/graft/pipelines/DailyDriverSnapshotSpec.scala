@@ -11,7 +11,6 @@ import org.apache.spark.sql.functions._
   * the day's effects (independently re-derived here), verify audits
   * reproducibility, forget redacts sealed history, and a replayed step
   * never duplicates fingerprint rows. */
-@graft.Slow
 class DailyDriverSnapshotSpec extends SparkSpecBase {
   private val sf = "/root/testdata/sf0.001"
   private val cfg = Curation.Config(minQuality = 2.95)

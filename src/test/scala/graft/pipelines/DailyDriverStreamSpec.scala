@@ -11,7 +11,6 @@ import org.apache.spark.sql.functions._
   * store — including a mid-day checkpoint restart (exactly-once) —
   * and a concurrent [[DailyDriver.maintain]] must fence the live
   * index streams loudly instead of letting them interleave. */
-@graft.Slow
 class DailyDriverStreamSpec extends SparkSpecBase {
   private val sf = "/root/testdata/sf0.001"
   private val cfg = Curation.Config(minQuality = 2.95)
