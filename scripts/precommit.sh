@@ -43,4 +43,17 @@ if [ -n "$renames" ]; then
   echo "precommit: hand-written commit point outside Versioned.publishMarker" >&2
   exit 1
 fi
+# Every fork goes through graft.pipelines.Par, whose join-before-rethrow
+# rule keeps a lease release or a publish from running while a fork
+# still writes (README, "Concurrent store halves"); the lease heartbeat
+# in AtomicSwap.scala is the one other thread the engine starts.
+threads=$(grep -rnE 'Executors\.|new Thread\(|ForkJoinPool|\.par\b' src/main/scala \
+            | grep -vE '^src/main/scala/graft/pipelines/Par\.scala:' \
+            | grep -vE '^src/main/scala/graft/operators/AtomicSwap\.scala:[0-9]+:.*(newSingleThreadScheduledExecutor|lease-hb-)' \
+            || true)
+if [ -n "$threads" ]; then
+  echo "$threads"
+  echo "precommit: thread or pool outside graft.pipelines.Par" >&2
+  exit 1
+fi
 sbt -batch compile Test/compile

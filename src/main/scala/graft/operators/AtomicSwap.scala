@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Crash-atomic directory replacement — the commit-marker + roll-forward
@@ -368,15 +368,25 @@ object Lease {
       catch { case _: java.io.IOException => false }
     }
 
+  /** The raw file system under a checksummed one (`file:`), `fs`
+    * itself otherwise: it writes no `.crc` sidecars and lists them. */
+  private[operators] def unchecksummed(fs: FileSystem): FileSystem = fs match {
+    case c: ChecksumFileSystem => c.getRawFileSystem
+    case other => other
+  }
+
   /** Commit `body` at `dst`: write it to `tmp`, drop a same-name
     * predecessor (present only when this exact marker was committed
     * before — a replay; the store's writer lease serializes committers),
     * then [[atomicRename]] — the one step that makes the file visible,
     * never half-written. Every numbered marker commits here, through
-    * [[Versioned.publishMarker]]. */
+    * [[Versioned.publishMarker]]. On a checksummed file system (`file:`)
+    * the tmp is written through the raw one underneath: a checksummed
+    * create also writes a `.<tmp>.crc` sidecar, which the rename would
+    * leave behind. */
   private[operators] def commitFile(fs: FileSystem, tmp: Path, dst: Path,
                                     body: String): Unit = {
-    val out = fs.create(tmp, true)
+    val out = unchecksummed(fs).create(tmp, true)
     try out.write(body.getBytes("UTF-8")) finally out.close()
     fs.delete(dst, false)
     require(atomicRename(fs, tmp, dst), s"commit failed: $tmp -> $dst")

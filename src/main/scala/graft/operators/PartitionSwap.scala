@@ -72,9 +72,11 @@ object PartitionSwap {
       // — a bare create-then-write torn mid-write would leave an empty
       // marker that repair treats as a full commit with a LOST drop
       // list (an emptied victim partition silently kept). Write-tmp +
-      // atomic rename, the content-bearing-marker discipline.
+      // atomic rename, the content-bearing-marker discipline (the tmp
+      // unchecksummed, as Lease.commitFile writes it: the rename would
+      // strand a `.crc` sidecar).
       val tmp = new Path(dst + "__pcommit.tmp")
-      val out = fs.create(tmp, true)
+      val out = Lease.unchecksummed(fs).create(tmp, true)
       try out.write(drop.mkString("\n").getBytes("UTF-8"))
       finally out.close()
       require(Lease.atomicRename(fs, tmp, markerPath(dst)),

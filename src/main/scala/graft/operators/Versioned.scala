@@ -104,6 +104,9 @@ private[operators] object Versioned {
 
   private val ManifestName = "v=(\\d+)\\.txt".r
   private val TmpManifestName = "\\.tmp-v=(\\d+)\\.txt".r
+  /** The checksum sidecar an older [[Lease.commitFile]] stranded beside
+    * its tmp on `file:` (the tmp's `.crc`, which the rename never moved). */
+  private val TmpSidecarName = "\\.\\.tmp-v=(\\d+)\\.txt\\.crc".r
 
   private def manifestDir(path: String): String = s"$path/manifest"
   private def manifestFile(path: String, v: Long): Path =
@@ -416,9 +419,6 @@ private[operators] object Versioned {
       .select(col(idCol)))
   }
 
-  /** Whether any of `ids` appears in an opened index — the
-    * landed-or-not probe a retried job-committed append needs; false on
-    * a never-built index. Joins on `ids`' first column. */
   /** The subset of `ids` present anywhere in an opened index — the
     * reconcile's EXACT repair probe for the rare census-miss case (a
     * mid-day fold moved lineage batches into the bulk): a full
@@ -434,6 +434,9 @@ private[operators] object Versioned {
           .distinct()
     }
 
+  /** Whether any of `ids` appears in an opened index — the
+    * landed-or-not probe a retried job-committed append needs; false on
+    * a never-built index. Joins on `ids`' first column. */
   def containsAnyIn(idx: Option[DataFrame], ids: DataFrame): Boolean =
     idx match {
       case None => false
@@ -564,18 +567,22 @@ private[operators] object Versioned {
     * version-N publish followed by a successful N+1 never revisits the
     * name (the aged rule keeps an in-flight publish's seconds-old tmp
     * safe, and gc runs under the writer lease so no publish races the
-    * sweep). */
+    * sweep). Also sweeps the `..tmp-v=N.txt.crc` sidecars that commits
+    * made before [[Lease.commitFile]] wrote its tmp unchecksummed. */
   def gcSweep(spark: SparkSession, path: String, curV: Long, graceMs: Long,
               families: Seq[(String, String, Long => Boolean)]): Unit = {
     val f = fsOf(spark, new Path(path))
     val aged = agedRule(spark, path, curV, graceMs, System.currentTimeMillis())
-    def sweep(dir: String, name: Regex, gone: Long => Boolean): Unit =
-      for ((v, st) <- numbered(f, new Path(dir), name)
+    def sweep(dir: String, name: Regex, gone: Long => Boolean,
+              fs: FileSystem = f): Unit =
+      for ((v, st) <- numbered(fs, new Path(dir), name)
            if gone(v) && aged(st.getModificationTime))
-        f.delete(st.getPath, true)
+        fs.delete(st.getPath, true)
     for ((dir, prefix, keep) <- families)
       sweep(dir, s"${Regex.quote(prefix)}(\\d+)".r, v => !keep(v))
     sweep(manifestDir(path), ManifestName, _ != curV)
     sweep(manifestDir(path), TmpManifestName, _ => true)
+    // a checksummed listing hides `.crc` files
+    sweep(manifestDir(path), TmpSidecarName, _ => true, Lease.unchecksummed(f))
   }
 }

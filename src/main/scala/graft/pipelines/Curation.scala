@@ -166,10 +166,10 @@ object Curation {
     curateWithSignatures(docs, benchmark, cfg)._1
 
   /** [[curate]] plus the CANDIDATE signature sets (doc_id, toks, n) the
-    * decision run already computed — so an incremental caller (q89)
-    * builds its persisted signature index from the scored cache instead
-    * of re-tokenizing the candidate corpus a third time (round 14,
-    * VERDICT #3). */
+    * decision run already computed — so a caller that persists a
+    * signature index (q89, `DailyDriver.init`) builds it from the scored
+    * cache instead of re-tokenizing the candidate corpus a third time
+    * (round 14, VERDICT #3). */
   private[graft] def curateWithSignatures(docs: DataFrame, benchmark: DataFrame,
                                           cfg: Config = Config()): (DataFrame, DataFrame) = {
     val (scored, _) = score(docs, benchmark, cfg)

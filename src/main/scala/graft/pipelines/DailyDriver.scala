@@ -70,9 +70,11 @@ import scala.collection.immutable.ArraySeq
   * Concurrent store halves: within one call, the job chains of
   * independent stores (signature index, fps, lexical, vector and PQ
   * indexes, snapshots) run side by side through [[Par.forkJoin]], and
-  * every fork joins before the decision publish — the commit point
-  * stays last, and a failing half surfaces only once every other half
-  * has finished (README "Concurrent store halves").
+  * every fork joins before the call's commit point — a [[step]]'s
+  * decision publish stays last — and before its lease is released
+  * ([[init]], whose decision write precedes the index builds); a
+  * failing half surfaces only once every other half has finished
+  * (README "Concurrent store halves").
   *
   * Contract: arrivals' doc_ids are disjoint from every prior day's
   * (re-crawls are deduped upstream — `StreamOps.streamingCurate`), and
@@ -504,8 +506,19 @@ object DailyDriver {
     rows.toDF("nprobe", "pq_depth", "n_results", "recall_at_k", "wall_sec")
   }
 
-  /** Day 0: full `curate` over the corpus; persist the decision table
-    * and the candidates' signature index.
+  /** Day 0: full curation over the corpus; persist the decision table,
+    * the fingerprints, and the candidates' signature and retrieval
+    * indexes.
+    *
+    * The stores are independent directories, so their chains run side
+    * by side ([[Par]]): the fps write needs only `docs` and runs beside
+    * the curation and its decision write; the signature index, the
+    * lexical index and the vec+PQ pair need the candidacy and run beside
+    * each other once the decisions are written, and inside the vector
+    * half the raw index build runs beside the PQ assignment, training
+    * and encode. The signature index is built from the token sets the
+    * curation already computed, not from a second tokenize pass. Every
+    * fork joins before the lease is released.
     *
     * @param embeddings optional (doc_id, embedding) relation for the
     *        corpus — when present, day 0 also trains a coarse quantizer
@@ -530,66 +543,68 @@ object DailyDriver {
            embeddings: Option[DataFrame] = None,
            quantizer: Option[DataFrame] = None): Unit =
    Lease.withLease(spark, dir, "init") {
+    import graft.operators.{KMeans, LexIndex, PqIndex, UnigramLm, VecIndex}
     // a re-init over a dir with an interrupted publish must not leave
     // that publish's marker to replay stale partitions over day 0
     PartitionSwap.repair(spark, decisionsDir(dir))
     PartitionSwap.repair(spark, indexDir(dir))
     PartitionSwap.repair(spark, fpsDir(dir))
-    Curation.curate(docs, benchmark, cfg)
-      .select(Curation.DecisionCols.map(col): _*)
-      .withColumn("batch", lit(0L))
-      .write.partitionBy("batch").mode("overwrite").parquet(decisionsDir(dir))
-    // content fingerprints for EVERY corpus doc — the substrate
-    // [[snapshot]] seals and [[verifySnapshot]] audits against; built
-    // here (the one place a full text scan already happens) and grown
-    // per-delta by [[step]], so a snapshot is never a corpus read
-    graft.operators.Snapshots.fingerprints(docs)
-      .withColumn("batch", lit(0L))
-      .write.partitionBy("batch").mode("overwrite").parquet(fpsDir(dir))
-    val decisions = DriverParquet.read(spark).load(decisionsDir(dir))
-    val cand = candidates(docs, decisions)
-    graft.streaming.StreamOps.signatureIndex(cand)
-      .withColumn("batch", lit(0L))
-      .write.partitionBy("batch").mode("overwrite").parquet(indexDir(dir))
-    // Retrieval index over the CANDIDATES (quality + contamination
-    // pass): candidacy is a per-doc verdict that later steps never
-    // revisit — unlike final_keep, which component rebuilds can flip —
-    // so the lexical index only ever GROWS and LexIndex.merge's
-    // disjoint-delta contract holds. Near-dup refinement is a
-    // query-time join against the decision table.
-    graft.operators.LexIndex.build(
-      graft.operators.UnigramLm.termFreq(cand, "doc_id", "text"), lexDir(dir))
+    def day0(df: DataFrame, path: String): Unit =
+      df.withColumn("batch", lit(0L))
+        .write.partitionBy("batch").mode("overwrite").parquet(path)
+    val (_, candSets) = Par.both(spark)(
+      // content fingerprints for EVERY corpus doc — the substrate
+      // [[snapshot]] seals and [[verifySnapshot]] audits against; built
+      // here (the one place a full text scan already happens) and grown
+      // per-delta by [[step]], so a snapshot is never a corpus read
+      day0(graft.operators.Snapshots.fingerprints(docs), fpsDir(dir)), {
+        val (decided, candSets) = Curation.curateWithSignatures(docs, benchmark, cfg)
+        day0(decided.select(Curation.DecisionCols.map(col): _*), decisionsDir(dir))
+        candSets
+      })
+    val cand = candidates(docs, DriverParquet.read(spark).load(decisionsDir(dir)))
     // The vector half over the same candidate set (the same candidacy
     // rule keeps the two retrieval indexes aligned doc-for-doc).
-    embeddings.foreach { emb =>
-      import graft.operators.{PqIndex, VecIndex}
+    def vecHalf(emb: DataFrame): Unit = {
       val candEmb = emb.join(cand.select(col("doc_id")), Seq("doc_id"))
-      val cents = graft.operators.KMeans.contiguous(
-        quantizer.getOrElse(graft.operators.KMeans
-          .lloyd(candEmb, "doc_id", "embedding", k = VecCells, iters = 2)))
+      val cents = KMeans.contiguous(quantizer.getOrElse(
+        KMeans.lloyd(candEmb, "doc_id", "embedding", k = VecCells, iters = 2)))
         .localCheckpoint() // read by both index builds + the PQ trainer
-      VecIndex.build(candEmb, "doc_id", "embedding",
-        cents, vecIndexDir(dir), persistCentroids = true)
       // the code table shares the raw index's cosine cell layout —
-      // one assignment, two stores (the rerank path's contract).
-      // persist, NOT localCheckpoint: the sub-codebook trainer and the
-      // encode both scan this CORPUS-SIZED relation (uncached, the
-      // candidates join + assignment fold would run twice), but
-      // localCheckpoint truncates lineage into non-replicated executor
-      // blocks — one lost executor mid-build would fail the whole job
-      // where cached-with-lineage just recomputes the lost partitions
-      // (assignFold is deterministic given the pinned cents)
-      val assigned = VecIndex
-        .assignFold(candEmb, "doc_id", "embedding", cents)
-        .select(col("doc_id"), col("embedding"), col("cid"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try
-        PqIndex.buildAssigned(assigned, "doc_id", "embedding",
-          PqIndex.quantFrom(cents, assigned, "doc_id", "embedding",
-            PqSubspaces, PqCodebookK, PqIters),
-          pqIndexDir(dir))
-      finally assigned.unpersist()
+      // one assignment, two stores (the rerank path's contract), so
+      // both builds read only `cents` and `candEmb`
+      Par.both(spark)(
+        VecIndex.build(candEmb, "doc_id", "embedding",
+          cents, vecIndexDir(dir), persistCentroids = true), {
+        // persist, NOT localCheckpoint: the sub-codebook trainer and the
+        // encode both scan this CORPUS-SIZED relation (uncached, the
+        // candidates join + assignment fold would run twice), but
+        // localCheckpoint truncates lineage into non-replicated executor
+        // blocks — one lost executor mid-build would fail the whole job
+        // where cached-with-lineage just recomputes the lost partitions
+        // (assignFold is deterministic given the pinned cents)
+        val assigned = VecIndex
+          .assignFold(candEmb, "doc_id", "embedding", cents)
+          .select(col("doc_id"), col("embedding"), col("cid"))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try
+          PqIndex.buildAssigned(assigned, "doc_id", "embedding",
+            PqIndex.quantFrom(cents, assigned, "doc_id", "embedding",
+              PqSubspaces, PqCodebookK, PqIters),
+            pqIndexDir(dir))
+        finally assigned.unpersist()
+      })
     }
+    Par.forkJoin(spark)(
+      () => day0(graft.streaming.StreamOps.signatureIndexFromSets(candSets), indexDir(dir)),
+      // Retrieval index over the CANDIDATES (quality + contamination
+      // pass): candidacy is a per-doc verdict that later steps never
+      // revisit — unlike final_keep, which component rebuilds can flip —
+      // so the lexical index only ever GROWS and LexIndex.merge's
+      // disjoint-delta contract holds. Near-dup refinement is a
+      // query-time join against the decision table.
+      () => LexIndex.build(UnigramLm.termFreq(cand, "doc_id", "text"), lexDir(dir)),
+      () => embeddings.foreach(vecHalf))
   }
 
   /** Day N: delta-curate the arrivals against the persisted state,

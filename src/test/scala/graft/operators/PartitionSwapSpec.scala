@@ -34,6 +34,9 @@ class PartitionSwapSpec extends SparkSpecBase {
     val fs = fsOf(t)
     assert(!fs.exists(new Path(t + "__pcommit")), "marker left behind")
     assert(!fs.exists(new Path(t + "__stage")), "stage left behind")
+    // listed through java.io: the checksummed file system hides `.crc` files
+    val beside = new java.io.File(t).getParentFile.list().toSeq
+    assert(!beside.exists(_.contains("__pcommit")), s"commit debris left behind: $beside")
     // repair on a healthy table is a no-op probe
     PartitionSwap.repair(spark, t)
     assert(rows(t) == Set((0L, 1L), (0L, 2L), (10L, 30L)))

@@ -69,6 +69,30 @@ class VersionedSpec extends SparkSpecBase {
       "LexIndex.gc perturbed the live index")
   }
 
+  test("a marker commit on file: strands no tmp or checksum sidecar; gc sweeps an aged one") {
+    val dir = tempDir("versioned-crc")
+    val mdir = new java.io.File(s"$dir/manifest")
+    // listed through java.io: the checksummed file system hides `.crc` files
+    def names = mdir.list().sorted.toSeq
+    Versioned.publishMarker(fsOf(dir), new Path(s"$dir/manifest/v=1.txt"),
+      Seq("base" -> 1L, "epoch" -> 1L, "cents" -> 0L))
+    assert(names == Seq("v=1.txt"), s"marker commit left debris: $names")
+    assert(Versioned.current(spark, dir).base == 1L)
+    // the sidecar an older commit stranded beside its tmp
+    val aged = new java.io.File(mdir, "..tmp-v=1.txt.crc")
+    java.nio.file.Files.write(aged.toPath, Array[Byte](1, 2, 3))
+    Versioned.publish(spark, dir, 2L, base = 2L, epoch = 1L, cents = 0L)
+    val fresh = new java.io.File(mdir, "..tmp-v=2.txt.crc")
+    java.nio.file.Files.write(fresh.toPath, Array[Byte](1, 2, 3))
+    val old = System.currentTimeMillis() - 120000L
+    assert(aged.setLastModified(old) &&
+      new java.io.File(mdir, "v=2.txt").setLastModified(old))
+    Versioned.gcSweep(spark, dir, 2L, graceMs = 60000L, families = Seq.empty)
+    assert(!aged.exists(), "aged checksum sidecar not swept")
+    assert(fresh.exists(), "sweep deleted a fresh sidecar")
+    assert(Versioned.current(spark, dir).v == 2L, "sweep perturbed the current manifest")
+  }
+
   test("publish hammer: concurrent readers never observe a torn manifest") {
     val dir = tempDir("versioned-hammer")
     val fs = fsOf(dir)
