@@ -56,4 +56,15 @@ if [ -n "$threads" ]; then
   echo "precommit: thread or pool outside graft.pipelines.Par" >&2
   exit 1
 fi
+# The celled stores' lifecycle lives once, in CellStore (README, "One
+# cell store"): VecIndex and PqIndex define only what differs, never a
+# second copy of a method CellStore owns.
+owned='currentVersion|currentEpoch|currentManifest|open|tryOpen|openAt|containsAny|presentIds|streamDeltaIds|deltaShare|cellSkew|pinStreamAppend|appendStreamBatch|compact|compactIfDelta|adoptStreamDelta|delete|gc|gcLocked|writeCells'
+copies=$(grep -nHE "\bdef +($owned)\b" src/main/scala/graft/operators/VecIndex.scala \
+           src/main/scala/graft/operators/PqIndex.scala || true)
+if [ -n "$copies" ]; then
+  echo "$copies"
+  echo "precommit: cell-store lifecycle method outside CellStore" >&2
+  exit 1
+fi
 sbt -batch compile Test/compile

@@ -546,7 +546,7 @@ object LexIndex {
   }
 
   /** Byte share of the live stream delta vs delta+bulk — the
-    * [[Versioned.deltaShare]] measurement for the lexical store, the
+    * [[CellStore.deltaShare]] measurement for the lexical store, the
     * LSM-debt number the mid-stream fold gates on (and the aging run's
     * readout column). 0.0 with no delta; 1.0 on a delta-only
     * (unpublished-bulk) root. */

@@ -84,6 +84,10 @@ object PartitionSwap {
       apply(fs, dst)
       fs.delete(markerPath(dst), false)
       fs.delete(stage, true)
+      // the tmp's checksum sidecar a swap made before the tmp was
+      // written unchecksummed (a checksummed delete would not see it)
+      Lease.unchecksummed(fs).delete(
+        new Path(dstP.getParent, s".${dstP.getName}__pcommit.tmp.crc"), false)
     }
   }
 

@@ -15,8 +15,9 @@ import org.apache.spark.sql.functions._
   * storage lifecycle so the recurring workload reads ~nprobe/nc of the
   * code table and nothing corpus-sized is ever re-derived per batch.
   *
-  * Layout — the [[Versioned]] manifest discipline ([[VecIndex]]'s,
-  * byte-for-byte the same protocol):
+  * Layout and lifecycle — the [[CellStore]], one copy shared with
+  * [[VecIndex]] (open, probes, stream appends, compact, delete, adopt,
+  * gc):
   * {{{
   *   path/cells/v=V/cid=N/part-*.parquet   // (id, codes) — the code table
   *   path/delta/e=E/cid=N/part-*.parquet   // batch appends (job-committed)
@@ -38,9 +39,6 @@ import org.apache.spark.sql.functions._
   * sub-codebooks over the RESIDUAL (vec − coarse centroid). Build it
   * from [[PQ.trainCodebooks]] output via [[PQ.codebookRow]], or any
   * deterministic convention (the specs use q95's donor-id convention).
-  *
-  * Mutations are single-writer under the path [[Lease]], like every
-  * index in the storage layer.
   *
   * Quantizer refresh: unlike [[VecIndex.retrain]], the code table is
   * LOSSY — codes cannot be re-encoded from the index's own contents —
@@ -68,31 +66,19 @@ import org.apache.spark.sql.functions._
   * cell's centroid, and a probe's distance table is built against the
   * same cell — only the cell-selection metric is the caller's.
   */
-object PqIndex {
+object PqIndex extends CellStore("pqindex", "quant") {
 
-  private def cellsDir(path: String) = s"$path/cells"
-  private def deltaDir(path: String) = s"$path/delta"
-  private def quantDir(path: String) = s"$path/quant"
-
-  private def cellsPath(path: String, v: Long) = Versioned.cellsPath(path, v)
-  private def deltaPath(path: String, e: Long) = Versioned.deltaPath(path, e)
-  private def quantPath(path: String, v: Long) = s"${quantDir(path)}/v=$v"
-
-  def currentVersion(spark: SparkSession, path: String): Long =
-    Versioned.currentVersion(spark, path)
-
-  /** The current delta epoch — operability readouts only ([[refresh]]
-    * retires an epoch with its quantizer; [[compact]] folds one). */
-  def currentEpoch(spark: SparkSession, path: String): Long =
-    Versioned.current(spark, path).epoch
+  protected val staleStreamAdvice: String =
+    "its batches would be invisible or encoded under a retired " +
+      "quantizer; restart the stream with a fresh checkpoint"
 
   /** The pinned quantizer row (g_cents, g_ccs, cents, ccs) at the
     * current manifest. */
   def openQuant(spark: SparkSession, path: String): DataFrame =
-    quantAt(spark, path, Versioned.current(spark, path))
+    quantAt(spark, path, currentManifest(spark, path))
 
   private def quantAt(spark: SparkSession, path: String,
-                      m: Versioned.Man): DataFrame = {
+                      m: Manifest): DataFrame = {
     require(m.cents > 0L, s"no quantizer published under $path — build first")
     DriverParquet.read(spark).load(quantPath(path, m.cents))
   }
@@ -121,9 +107,10 @@ object PqIndex {
   /** [[encode]] with the caller's cell assignment: `assigned` carries a
     * `cid` column (the external layout — e.g. `VecIndex.assignFold`'s
     * cosine cells), codes are the residual against THAT cell. Same
-    * map-side single-pass shape. */
-  private def encodeAssigned(assigned: DataFrame, idCol: String,
-                             vecCol: String, quant: DataFrame): DataFrame =
+    * map-side single-pass shape; with a [[quantLocal]] row it reads no
+    * storage — the composite ingest's per-trigger form. */
+  private[graft] def encodeAssigned(assigned: DataFrame, idCol: String,
+                                    vecCol: String, quant: DataFrame): DataFrame =
     assigned
       .select(col(idCol), col(vecCol), col("cid").cast("int").as("cid"))
       .crossJoin(broadcast(quant))
@@ -140,12 +127,9 @@ object PqIndex {
   private def installLocked(spark: SparkSession, path: String,
                             encoded: DataFrame, idCol: String,
                             quant: DataFrame, bumpEpoch: Boolean): Unit = {
-    val m = Versioned.current(spark, path)
+    val m = currentManifest(spark, path)
     val n = m.v + 1
-    encoded
-      .hint("rebalance", col("cid"))
-      .sortWithinPartitions(col("cid"), col(idCol))
-      .write.mode("overwrite").partitionBy("cid").parquet(cellsPath(path, n))
+    writeCells(encoded, idCol, path, n)
     quant.write.mode("overwrite").parquet(quantPath(path, n))
     Versioned.publish(spark, path, n, base = n,
       epoch = if (bumpEpoch) m.epoch + 1L else m.epoch, cents = n)
@@ -161,8 +145,8 @@ object PqIndex {
     * the epoch in the same publish. One-row collects. */
   private def requireDeltaCompatible(spark: SparkSession, path: String,
                                      quant: DataFrame): Unit = {
-    val m = Versioned.current(spark, path)
-    if (m.cents > 0L && Versioned.hasCells(spark, deltaPath(path, m.epoch))) {
+    val m = currentManifest(spark, path)
+    if (m.cents > 0L && hasCells(spark, deltaPath(path, m.epoch))) {
       val same = quantContentEquals(quant, quantAt(spark, path, m))
       require(same,
         s"rebuild under a DIFFERENT quantizer with a live delta under " +
@@ -197,7 +181,7 @@ object PqIndex {
   def build(emb: DataFrame, idCol: String, vecCol: String,
             quant: DataFrame, path: String): Unit = {
     val spark = emb.sparkSession
-    Lease.withLease(spark, path, "pqindex-build") {
+    Lease.withLease(spark, path, owner("build")) {
       requireDeltaCompatible(spark, path, quant)
       installLocked(spark, path, encode(emb, idCol, vecCol, quant),
         idCol, quant, bumpEpoch = false)
@@ -209,7 +193,7 @@ object PqIndex {
   def buildAssigned(assigned: DataFrame, idCol: String, vecCol: String,
                     quant: DataFrame, path: String): Unit = {
     val spark = assigned.sparkSession
-    Lease.withLease(spark, path, "pqindex-build") {
+    Lease.withLease(spark, path, owner("build")) {
       requireDeltaCompatible(spark, path, quant)
       installLocked(spark, path,
         encodeAssigned(assigned, idCol, vecCol, quant),
@@ -217,46 +201,15 @@ object PqIndex {
     }
   }
 
-  /** The live code table (id, codes, cid) as a pinned snapshot:
-    * cells ∪ current delta epoch, whichever exist. */
-  def open(spark: SparkSession, path: String): DataFrame =
-    tryOpen(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"no index layout under $path"))
-
-  def tryOpen(spark: SparkSession, path: String): Option[DataFrame] =
-    openAt(spark, path, Versioned.current(spark, path))
-
-  private def openAt(spark: SparkSession, path: String,
-                     m: Versioned.Man): Option[DataFrame] = {
-    // ownership-resolving bulk read — a cell-pruned [[delete]]'s
-    // version references untouched cells where they live
-    val bulk = Versioned.openBulkResolved(spark, path, m.base)
-    val delta =
-      if (Versioned.hasCells(spark, deltaPath(path, m.epoch)))
-        // drop the stream lineage's per-micro-batch replay key (a no-op
-        // on a batch-appended epoch, which has no b= level)
-        Some(DriverParquet.read(spark).load(deltaPath(path, m.epoch)).drop("b"))
-      else None
-    (bulk.toSeq ++ delta.toSeq).reduceOption(_.unionByName(_))
-  }
-
   /** Batch incremental append: encode the arrivals against the PINNED
     * quantizer and land them in the current delta epoch in one
     * job-committed write — [[VecIndex.append]]'s discipline, including
     * the replay probe ([[containsAny]]) and the sink-log guard. */
-  /** The one-discipline-per-epoch guard batch appends share: a
-    * stream-governed epoch (legacy `_spark_metadata` or the `b=`
-    * lineage layout) must not receive interleaved batch files — a
-    * replayed micro-batch's partition overwrite could clobber them. */
-  private def requireBatchEpoch(spark: SparkSession, path: String,
-                                epoch: Long): Unit =
-    Versioned.requireBatchEpoch(spark, path, epoch)
-
   def append(emb: DataFrame, idCol: String, vecCol: String,
              path: String): Unit = {
     val spark = emb.sparkSession
-    Lease.withLease(spark, path, "pqindex-append") {
-      val m = Versioned.current(spark, path)
+    Lease.withLease(spark, path, owner("append")) {
+      val m = currentManifest(spark, path)
       requireBatchEpoch(spark, path, m.epoch)
       encode(emb, idCol, vecCol, quantAt(spark, path, m))
         .write.mode("append").partitionBy("cid").parquet(deltaPath(path, m.epoch))
@@ -270,8 +223,8 @@ object PqIndex {
   def appendAssigned(assigned: DataFrame, idCol: String, vecCol: String,
                      path: String): Unit = {
     val spark = assigned.sparkSession
-    Lease.withLease(spark, path, "pqindex-append") {
-      val m = Versioned.current(spark, path)
+    Lease.withLease(spark, path, owner("append")) {
+      val m = currentManifest(spark, path)
       requireBatchEpoch(spark, path, m.epoch)
       encodeAssigned(assigned, idCol, vecCol, quantAt(spark, path, m))
         .write.mode("append").partitionBy("cid").parquet(deltaPath(path, m.epoch))
@@ -320,166 +273,16 @@ object PqIndex {
       .start()
   }
 
-  /** [[VecIndex.pinStreamAppend]]'s code-table twin: resolve the
-    * manifest once and enforce the one-lineage-per-epoch rule — the
-    * composite-ingest entry point. */
-  private[graft] def pinStreamAppend(spark: SparkSession, path: String,
-                                     checkpoint: String): Versioned.Man = {
-    val m0 = Versioned.current(spark, path)
-    Versioned.requireStreamAdoptable(spark, path, m0.epoch, checkpoint)
-    m0
-  }
-
   /** The pinned quantizer row materialized as a DRIVER-LOCAL relation —
     * a composite ingest loads it ONCE at stream start (the per-batch
     * fence already pins `cents`, so the row cannot change under a live
     * lineage) instead of re-reading the quantizer parquet inside every
     * micro-batch's encode. One row: coarse centroids + sub-codebooks. */
   private[graft] def quantLocal(spark: SparkSession, path: String,
-                                m0: Versioned.Man): DataFrame = {
+                                m0: Manifest): DataFrame = {
     val q = quantAt(spark, path, m0)
     spark.createDataFrame(java.util.Arrays.asList(q.collect(): _*), q.schema)
   }
-
-  /** Encode ONE already-coarse-assigned micro-batch against a pre-loaded
-    * ([[quantLocal]]) quantizer row — the composite ingest's per-trigger
-    * form, with no storage read. */
-  private[graft] def encodeAssignedLocal(assigned: DataFrame, idCol: String,
-                                         vecCol: String,
-                                         quant: DataFrame): DataFrame =
-    encodeAssigned(assigned, idCol, vecCol, quant)
-
-  /** ONE micro-batch of the code-append stream: fence-then-write
-    * under the index lease ([[VecIndex.appendStreamBatch]]'s
-    * rationale — maintenance mutations hold the same lease, so a
-    * compact/build/refresh can never publish between the manifest
-    * check and the write; bounded-patience acquire so a minutes-long
-    * maintenance pass waits the batch out instead of killing it). */
-  private[graft] def appendStreamBatch(spark: SparkSession, path: String,
-                                       m0: Versioned.Man, batch: DataFrame,
-                                       batchId: Long): Unit =
-    Lease.withLeaseWait(spark, path, "pqindex-append") {
-      val cur = Versioned.current(spark, path)
-      if (cur.epoch != m0.epoch || cur.cents != m0.cents)
-        throw new IllegalStateException(
-          s"append stream's pinned manifest (epoch ${m0.epoch}, quantizer " +
-            s"${m0.cents}) was superseded (now epoch ${cur.epoch}, " +
-            s"quantizer ${cur.cents}) — its batches would be invisible " +
-            s"or encoded under a retired quantizer; restart the stream " +
-            s"with a fresh checkpoint")
-      batch.withColumn("b", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("b", "cid")
-        .parquet(deltaPath(path, m0.epoch))
-    }
-
-  /** Whether ANY of `ids` is already indexed — the landed-or-not probe
-    * a retried append needs; false on a never-built index. */
-  def containsAny(spark: SparkSession, path: String, ids: DataFrame): Boolean =
-    Versioned.containsAnyIn(tryOpen(spark, path), ids)
-
-  /** The ids the current delta epoch's stream lineage landed (`b=`
-    * census; None when the epoch is not stream-governed) — the day-end
-    * reconcile's delta-bounded landed-work probe
-    * ([[Versioned.streamDeltaIds]]). */
-  def streamDeltaIds(spark: SparkSession, path: String,
-                     idCol: String): Option[DataFrame] =
-    Versioned.streamDeltaIds(spark, path, idCol)
-
-  /** The subset of `ids` present anywhere in the index — the
-    * reconcile's exact repair probe for the rare census-miss case
-    * ([[Versioned.presentIdsIn]]). */
-  def presentIds(spark: SparkSession, path: String, ids: DataFrame): DataFrame =
-    Versioned.presentIdsIn(tryOpen(spark, path), ids)
-
-  /** Fold the delta into a fresh cells version and bump the epoch in
-    * one publish — [[VecIndex.compact]] for the code table (codes are
-    * cell-stable, so the fold is a pure re-cluster). Pinned readers
-    * keep their version; [[gc]] collects it after `gcGraceMs`. */
-  def compact(spark: SparkSession, path: String, idCol: String,
-              gcGraceMs: Long = 0L): Unit =
-    Lease.withLease(spark, path, "pqindex-maintenance") {
-      val m = Versioned.current(spark, path)
-      val rows = tryOpen(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"no index layout under $path"))
-      val n = m.v + 1
-      rows.hint("rebalance", col("cid"))
-      .sortWithinPartitions(col("cid"), col(idCol))
-        .write.mode("overwrite").partitionBy("cid").parquet(cellsPath(path, n))
-      Versioned.publish(spark, path, n, base = n, epoch = m.epoch + 1L,
-        cents = m.cents)
-      gcLocked(spark, path, gcGraceMs)
-    }
-
-  /** Day-end handback from stream to batch discipline — [[graft
-    * .operators.VecIndex.adoptStreamDelta]]'s code-table sibling:
-    * re-key a stream-governed delta epoch into a fresh batch-governed
-    * one in O(delta) under this store's lease, so tomorrow's batch
-    * [[appendAssigned]] never meets the lineage's replay keys. Stream
-    * stopped and drained first; no-op on a batch-governed epoch.
-    * @return true iff a stream lineage was re-keyed */
-  def adoptStreamDelta(spark: SparkSession, path: String): Boolean =
-    Lease.withLease(spark, path, "pqindex-maintenance") {
-      Versioned.adoptStreamDelta(spark, path)
-    }
-
-  /** Remove ids from the code table — the retraction path, sharing
-    * [[compact]]'s publish contract, CELL-PRUNED like
-    * [[graft.operators.VecIndex.delete]]: only victim-bearing cells
-    * (plus the folded live delta) are rewritten; untouched cells are
-    * referenced where they live through the version's ownership
-    * sidecar ([[Versioned.deleteCells]]). Absent ids are publish-free
-    * no-ops. The victim side is count-gated past `maxBroadcastIds`
-    * distinct ids ([[Versioned.gatedIds]] — a source-scale retraction
-    * falls back to shuffle joins instead of OOMing the driver). */
-  def delete(spark: SparkSession, path: String, idCol: String,
-             ids: DataFrame,
-             maxBroadcastIds: Long = Versioned.DefaultMaxBroadcastIds): Unit =
-    Lease.withLease(spark, path, "pqindex-maintenance") {
-      Versioned.deleteCells(spark, path, idCol, ids, maxBroadcastIds)
-    }
-
-  /** [[Versioned.gcSweep]] over this layout's families — same
-    * supersession-bounded grace rule as the other indexes. */
-  def gc(spark: SparkSession, path: String, graceMs: Long = 0L): Unit =
-    Lease.withLease(spark, path, "pqindex-gc") {
-      gcLocked(spark, path, graceMs)
-    }
-
-  private def gcLocked(spark: SparkSession, path: String, graceMs: Long): Unit = {
-    val m = Versioned.current(spark, path)
-    if (m.v == 0L) return
-    // keep every cells version the live ownership chain references
-    // (cell-pruned deletes — the delete-only refcount rule)
-    val cellRefs = Versioned.referencedCellVersions(spark, path, m.base)
-    Versioned.gcSweep(spark, path, m.v, graceMs, Seq(
-      (cellsDir(path), "v=", (v: Long) => cellRefs(v)),
-      (deltaDir(path), "e=", (v: Long) => v == m.epoch),
-      (quantDir(path), "v=", (v: Long) => v == m.cents)))
-  }
-
-  /** Share of code-table bytes in the current delta epoch — the policy
-    * trigger, two driver-side content summaries ([[VecIndex
-    * .deltaShare]]). */
-  def deltaShare(spark: SparkSession, path: String): Double =
-    Versioned.deltaShare(spark, path)
-
-  /** @return true iff the gated fold ran */
-  def compactIfDelta(spark: SparkSession, path: String, idCol: String,
-                     maxDeltaShare: Double = 0.2,
-                     gcGraceMs: Long = 0L): Boolean = {
-    val share = deltaShare(spark, path)
-    if (share <= maxDeltaShare) false
-    else { compact(spark, path, idCol, gcGraceMs); true }
-  }
-
-  /** Cell-occupancy skew of the live code table: the hottest cell's
-    * share of all rows ([[VecIndex.cellSkew]], code-table edition — the
-    * drift signal the lossy index otherwise lacks). One column-pruned
-    * scan of `cid`; 0.0 on an empty index. */
-  def cellSkew(spark: SparkSession, path: String): Double =
-    Versioned.cellSkewOf(tryOpen(spark, path))
 
   /** Quantizer refresh — the class doc's drift-repair path: re-encode
     * the SOURCE embeddings under the new quantizer row and publish the
@@ -499,7 +302,7 @@ object PqIndex {
   def refresh(emb: DataFrame, idCol: String, vecCol: String,
               quant: DataFrame, path: String, gcGraceMs: Long = 0L): Unit = {
     val spark = emb.sparkSession
-    Lease.withLease(spark, path, "pqindex-maintenance") {
+    Lease.withLease(spark, path, owner("maintenance")) {
       installLocked(spark, path, encode(emb, idCol, vecCol, quant),
         idCol, quant, bumpEpoch = true)
       gcLocked(spark, path, gcGraceMs)
@@ -513,7 +316,7 @@ object PqIndex {
                       quant: DataFrame, path: String,
                       gcGraceMs: Long = 0L): Unit = {
     val spark = assigned.sparkSession
-    Lease.withLease(spark, path, "pqindex-maintenance") {
+    Lease.withLease(spark, path, owner("maintenance")) {
       installLocked(spark, path,
         encodeAssigned(assigned, idCol, vecCol, quant),
         idCol, quant, bumpEpoch = true)

@@ -554,7 +554,9 @@ object Snapshots {
     * marker — always at or after the moment each older revision
     * stopped being the one [[open]] resolves), torn-redact data dirs
     * that never published, and crashed-create debris (unsealed `snap/`
-    * dirs, `.tmp-*` markers), aged by their own mtime. */
+    * dirs, `.tmp-*` markers) and the `..tmp-*.crc` sidecars older
+    * marker commits stranded in `seal/` and `snap/v=N/`
+    * ([[Versioned.sweepTmpSidecars]]), aged by their own mtime. */
   def gc(spark: SparkSession, root: String, keep: Long => Boolean,
          graceMs: Long = 0L): Unit =
     Lease.withLease(spark, root, "snapshot-gc") {
@@ -593,6 +595,7 @@ object Snapshots {
             f.delete(st.getPath, false)
           case _ => ()
         }
+      Versioned.sweepTmpSidecars(f, sr, now2 - _ >= graceMs)
       // scaffolding of EVERY aged retired version first (their
       // manifests stop pinning anything — the versions are
       // unpublished), so one pass converges even when retired versions
@@ -664,8 +667,10 @@ object Snapshots {
             if (!isSealed && !retiring &&
               now2 - st.getModificationTime >= graceMs)
               f.delete(st.getPath, true)
-            else if (isSealed)
+            else if (isSealed) {
               sweepRevisions(f, root, v, graceMs, now2, censusRefs)
+              Versioned.sweepTmpSidecars(f, st.getPath, now2 - _ >= graceMs)
+            }
           case _ => ()
         }
       // shard-export debris and superseded export revisions, same rules

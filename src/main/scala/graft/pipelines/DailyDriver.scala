@@ -83,7 +83,7 @@ import scala.collection.immutable.ArraySeq
   * wholesale overwrites, so re-running it converges).
   */
 object DailyDriver {
-  import graft.operators.{AtomicSwap, Lease, PartitionSwap, fsOf}
+  import graft.operators.{AtomicSwap, CellStore, Lease, PartitionSwap, fsOf}
 
   private def decisionsDir(dir: String) = s"$dir/decisions"
   private def indexDir(dir: String) = s"$dir/sig_index"
@@ -764,23 +764,27 @@ object DailyDriver {
       // containsAny over the remainder guards the rare census miss — a
       // mid-day fold that moved lineage batches into the bulk — and the
       // exact presentIds repair covers even that).
-      if (streamed.isEmpty) {
-        if (!VecIndex.containsAny(spark, vdir, candEmb.select(col("doc_id"))))
-          VecIndex.append(candEmb, "doc_id", "embedding", cents, vdir)
-      } else {
-        val vecTodo = minusLanded(candEmb, streamed.get.vecLanded)
-        if (!vecTodo.isEmpty) {
-          if (!VecIndex.containsAny(spark, vdir, vecTodo.select(col("doc_id"))))
-            VecIndex.append(vecTodo, "doc_id", "embedding", cents, vdir)
-          else {
-            val todo2 = vecTodo.join(
-              VecIndex.presentIds(spark, vdir, vecTodo.select(col("doc_id"))),
-              Seq("doc_id"), "left_anti")
-            if (!todo2.isEmpty)
-              VecIndex.append(todo2, "doc_id", "embedding", cents, vdir)
+      def landUnlanded(store: CellStore, sdir: String,
+                       landed: StreamCensus => Option[DataFrame])
+                      (append: DataFrame => Unit): Unit = streamed match {
+        case None =>
+          if (!store.containsAny(spark, sdir, candEmb.select(col("doc_id"))))
+            append(candEmb)
+        case Some(census) =>
+          val todo = minusLanded(candEmb, landed(census))
+          if (!todo.isEmpty) {
+            if (!store.containsAny(spark, sdir, todo.select(col("doc_id"))))
+              append(todo)
+            else {
+              val todo2 = todo.join(
+                store.presentIds(spark, sdir, todo.select(col("doc_id"))),
+                Seq("doc_id"), "left_anti")
+              if (!todo2.isEmpty) append(todo2)
+            }
           }
-        }
       }
+      landUnlanded(VecIndex, vdir, _.vecLanded)(
+        VecIndex.append(_, "doc_id", "embedding", cents, vdir))
       // the code table gets the SAME day's candidates under the SAME
       // cosine assignment (assignFold is deterministic given (rows,
       // cents), so the two stores' cell layouts stay identical without
@@ -797,30 +801,13 @@ object DailyDriver {
       // table, so nothing is lost.
       val pqdir = pqIndexDir(dir)
       if (PqIndex.currentVersion(spark, pqdir) > 0L &&
-          pqCoarseAligned(spark, pqdir, collectCoarse(cents))) {
-        def pqAppend(rows: DataFrame): Unit =
+          pqCoarseAligned(spark, pqdir, collectCoarse(cents)))
+        // same census discipline as the vec half (see above)
+        landUnlanded(PqIndex, pqdir, _.pqLanded)(rows =>
           PqIndex.appendAssigned(
             VecIndex.assignFold(rows, "doc_id", "embedding", cents)
               .select(col("doc_id"), col("embedding"), col("cid")),
-            "doc_id", "embedding", pqdir)
-        // same census discipline as the vec half (see above)
-        if (streamed.isEmpty) {
-          if (!PqIndex.containsAny(spark, pqdir, candEmb.select(col("doc_id"))))
-            pqAppend(candEmb)
-        } else {
-          val pqTodo = minusLanded(candEmb, streamed.get.pqLanded)
-          if (!pqTodo.isEmpty) {
-            if (!PqIndex.containsAny(spark, pqdir, pqTodo.select(col("doc_id"))))
-              pqAppend(pqTodo)
-            else {
-              val todo2 = pqTodo.join(
-                PqIndex.presentIds(spark, pqdir, pqTodo.select(col("doc_id"))),
-                Seq("doc_id"), "left_anti")
-              if (!todo2.isEmpty) pqAppend(todo2)
-            }
-          }
-        }
-      }
+            "doc_id", "embedding", pqdir))
     }
     // The store halves are independent directories, each with its own
     // lease and replay guard, so they run side by side (Par): the fps
@@ -1165,7 +1152,7 @@ object DailyDriver {
                     col("norm"), col("cid")), batchId)
                 pqPin.foreach { case (p, quant) =>
                   PqIndex.appendStreamBatch(spark, pqdir, p,
-                    PqIndex.encodeAssignedLocal(
+                    PqIndex.encodeAssigned(
                       assigned.select(col("doc_id"), col("embedding"),
                         col("cid")),
                       "doc_id", "embedding", quant), batchId)
@@ -1263,19 +1250,16 @@ object DailyDriver {
     // The three stores are independent directories under their own
     // leases: their chains run side by side (Par) and join before the
     // step.
+    def censusThenAdopt(store: CellStore, sdir: String): () => Option[DataFrame] =
+      () => {
+        val landed = store.streamDeltaIds(spark, sdir, "doc_id")
+          .map(_.distinct().localCheckpoint(true))
+        store.adoptStreamDelta(spark, sdir)
+        landed
+      }
     val Seq(vecLanded, pqLanded, _) = Par.forkJoin[Option[DataFrame]](spark)(
-      () => {
-        val landed = VecIndex.streamDeltaIds(spark, vecIndexDir(dir), "doc_id")
-          .map(_.distinct().localCheckpoint(true))
-        VecIndex.adoptStreamDelta(spark, vecIndexDir(dir))
-        landed
-      },
-      () => {
-        val landed = PqIndex.streamDeltaIds(spark, pqIndexDir(dir), "doc_id")
-          .map(_.distinct().localCheckpoint(true))
-        PqIndex.adoptStreamDelta(spark, pqIndexDir(dir))
-        landed
-      },
+      censusThenAdopt(VecIndex, vecIndexDir(dir)),
+      censusThenAdopt(PqIndex, pqIndexDir(dir)),
       () => { graft.operators.LexIndex.clearStreamDelta(spark, lexDir(dir)); None })
     val census = StreamCensus(vecLanded, pqLanded)
     val out = stepImpl(spark, staged, benchmark, dir, cfg, embeddings,
@@ -1343,6 +1327,16 @@ object DailyDriver {
       decisionsDir(dir))
     val prevB = openDecisionsBatched(spark, dir)
     val prev = prevB.drop("batch")
+    // the vector deletes publish a fresh cells version — a corpus-sized
+    // rewrite — so gate them on a victim actually being present (the
+    // lex delete's victimBuckets probe gives it this for free): a
+    // post-swap replay, or victims that were never candidates, must stay
+    // a metadata-cost no-op instead of rewriting and re-bumping both
+    // stores for nothing
+    def gatedDelete(store: CellStore, sdir: String): () => Unit = () =>
+      if (store.currentVersion(spark, sdir) > 0L &&
+          store.containsAny(spark, sdir, vIds))
+        store.delete(spark, sdir, "doc_id", vIds)
     // the delta: every re-decided survivor row (eager, delta-sized) —
     // victims themselves are simply dropped from their partitions.
     // The store retractions run beside it (Par — independent
@@ -1364,24 +1358,8 @@ object DailyDriver {
         () =>
           if (LexIndex.currentVersion(spark, lexDir(dir)) > 0L)
             LexIndex.delete(spark, lexDir(dir), vIds),
-        // the vector deletes publish a fresh cells version — a
-        // corpus-sized rewrite — so gate them on a victim actually being
-        // present (the lex delete's victimBuckets probe gives it this for
-        // free): a post-swap replay, or victims that were never
-        // candidates, must stay a metadata-cost no-op instead of
-        // rewriting and re-bumping both stores for nothing
-        () => {
-          val vdir = vecIndexDir(dir)
-          if (VecIndex.currentVersion(spark, vdir) > 0L &&
-              VecIndex.containsAny(spark, vdir, vIds))
-            VecIndex.delete(spark, vdir, "doc_id", vIds)
-        },
-        () => {
-          val pqdir = pqIndexDir(dir)
-          if (PqIndex.currentVersion(spark, pqdir) > 0L &&
-              PqIndex.containsAny(spark, pqdir, vIds))
-            PqIndex.delete(spark, pqdir, "doc_id", vIds)
-        },
+        gatedDelete(VecIndex, vecIndexDir(dir)),
+        gatedDelete(PqIndex, pqIndexDir(dir)),
         // the victims' text-derived fingerprints go too — the signature
         // rewrite's exact partition-pruned protocol
         () =>
@@ -2200,7 +2178,7 @@ object DailyDriver {
     // products) fails only AFTER the mutation — whole-set min/max, one
     // aggregate, so a single odd row can't slip past a first-row probe
     val dims = candEmb.agg(min(size(col("embedding"))).as("mn"),
-      max(size(col("embedding"))).as("mx")).head
+      max(size(col("embedding"))).as("mx")).head()
     require(!dims.isNullAt(0),
       "the candidate embedding set is empty — a wholesale vector " +
         "rebuild would publish an empty quantizer and strand the code " +

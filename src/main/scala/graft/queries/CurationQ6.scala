@@ -511,7 +511,7 @@ object CurationQ6 {
     // q115's trainer (the merge loop is inherently driver-stepped);
     // null-safe so an empty table fails in the trainer's require, not
     // an NPE here.
-    val maxRow = docs.agg(max(col("doc_id"))).head
+    val maxRow = docs.agg(max(col("doc_id"))).head()
     val maxId = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
     val (merges, _) =
       Bpe.train(docs.filter(col("doc_id") * 5 < maxId * 4), "text", bpeRounds)

@@ -25,6 +25,9 @@ class PartitionSwapSpec extends SparkSpecBase {
   test("swap replaces exactly the staged partitions and drops the listed ones") {
     val t = s"${tempDir("pswap")}/t"
     seed(t)
+    // the tmp's checksum sidecar an older swap stranded beside the table
+    java.nio.file.Files.write(new java.io.File(new java.io.File(t).getParentFile,
+      ".t__pcommit.tmp.crc").toPath, Array[Byte](1, 2, 3))
     // replace batch=10, drop batch=20, leave batch=0 untouched
     PartitionSwap.swap(spark, t, drop = Seq("batch=20")) { stage =>
       Seq((10L, 30L)).toDF("batch", "x")

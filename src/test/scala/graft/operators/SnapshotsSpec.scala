@@ -115,6 +115,24 @@ class SnapshotsSpec extends SparkSpecBase {
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$root/snap/v=9")))
     assert(Snapshots.versions(spark, root) == Seq(1L))
     assert(Snapshots.open(spark, root, 1L).count() == 4L)
+    // the `..tmp-*.crc` sidecars older marker commits stranded in seal/
+    // and snap/v=N/ (written through java.io: the checksummed file
+    // system hides `.crc` files): aged ones go, fresh ones stay
+    def sidecar(dir: String, name: String, aged: Boolean): java.io.File = {
+      val f = new java.io.File(s"$root/$dir", name)
+      java.nio.file.Files.write(f.toPath, Array[Byte](1, 2, 3))
+      if (aged) assert(f.setLastModified(System.currentTimeMillis() - 120000L))
+      f
+    }
+    val aged = Seq(sidecar("seal", "..tmp-v=1.txt.crc", aged = true),
+      sidecar("seal", "..tmp-hwm.crc", aged = true),
+      sidecar("snap/v=1", "..tmp-r=0.ok.crc", aged = true))
+    val fresh = Seq(sidecar("seal", "..tmp-v=2.txt.crc", aged = false),
+      sidecar("snap/v=1", "..tmp-r=1.ok.crc", aged = false))
+    Snapshots.gc(spark, root, keep = _ => true, graceMs = 60000L)
+    assert(aged.forall(!_.exists()), s"aged sidecars not swept: ${aged.filter(_.exists())}")
+    assert(fresh.forall(_.exists()), "gc deleted a fresh sidecar")
+    assert(Snapshots.open(spark, root, 1L).count() == 4L)
   }
 
   test("create never re-allocates a retired-in-grace version number") {
