@@ -41,7 +41,6 @@ object JobCosts {
 
   // SparkContext's local-property keys (private to Spark)
   private val GroupKey = "spark.jobGroup.id"
-  private val DescriptionKey = "spark.job.description"
   private val ScopeKey = "spark.rdd.scope"
   private val ScopeName = "\"name\":\"([^\"]*)\"".r.unanchored
   private val ScopeId = "\"id\":\"([^\"]*)\"".r.unanchored

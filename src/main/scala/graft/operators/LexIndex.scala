@@ -291,11 +291,18 @@ object LexIndex {
 
   /** [[merge]]'s body, for callers already holding the `path` lease
     * ([[appendStream]]'s probe+merge pair must be one critical
-    * section). `precomputed` is the streaming fast path: (touched
-    * buckets, delta doc count, delta token total) already known from
-    * the fence's shape aggregate — skips two delta-sized driver jobs
-    * per micro-batch. */
-  /** `beforePublish` runs after every new version directory is written
+    * section). Returns whether it published a version (false when the
+    * delta holds no keyed row, so no bucket is touched).
+    *
+    * The delta is evaluated once. Without `precomputed`, it is
+    * materialized once here, one aggregate over that copy yields the
+    * touched buckets, the delta doc count and the token total, and the
+    * version write reads the same copy. `precomputed` is the streaming
+    * fast path: (touched buckets, delta doc count, delta token total)
+    * already known from the fence's shape aggregate, so the lazy delta
+    * is read by the version write alone.
+    *
+    * `beforePublish` runs after every new version directory is written
     * but before the atomic manifest rename — the mid-stream fold hooks
     * its marker-write + generation bump here so the composed-read gap
     * (new generation visible, merge not yet published) lasts two
@@ -305,17 +312,23 @@ object LexIndex {
                           deltaTf0: DataFrame,
                           precomputed: Option[(IndexedSeq[Long], Long, Long)]
                             = None,
-                          beforePublish: () => Unit = () => ()): Unit = {
-    // same null-key guard as [[rebuild]] (ADVICE r13): the window
-    // denormalization must not admit rows the former joins dropped
-    val deltaTf = deltaTf0.filter(col("term").isNotNull && col("doc_id").isNotNull)
+                          beforePublish: () => Unit = () => ()): Boolean = {
     val cur = currentVersion(spark, path)
     require(cur > 0L, s"no published index under $path — build first")
     val man = bucketsAt(spark, path, cur)
-    val touched = precomputed.map(_._1.toArray).getOrElse(
-      deltaTf.select(tb(col("term")).as("tb")).distinct()
-        .collect().map(_.getLong(0)))
-    if (touched.isEmpty) return
+    // same null-key guard as [[rebuild]] (ADVICE r13): the window
+    // denormalization must not admit rows the former joins dropped
+    val keyed = deltaTf0.filter(col("term").isNotNull && col("doc_id").isNotNull)
+    val (deltaTf, (touched, dN, dT)) = precomputed match {
+      case Some(shape) => (keyed, shape)
+      case None =>
+        val d = keyed.localCheckpoint(true)
+        val r = d.agg(collect_set(tb(col("term"))).as("tbs"),
+          count_distinct(col("doc_id")).as("n"),
+          coalesce(sum(col("tf")), lit(0L)).as("t")).head()
+        (d, (r.getSeq[Long](0).toIndexedSeq, r.getLong(1), r.getLong(2)))
+    }
+    if (touched.isEmpty) return false
     val oldLive = touched.filter(man.contains)
     val oldPost =
       if (oldLive.isEmpty) emptyPostings(spark).select("term", "doc_id", "tf", "dl")
@@ -336,18 +349,14 @@ object LexIndex {
       val r = stats(spark, path).select(col("n_docs"), col("t_total")).head()
       (r.getLong(0), r.getLong(1))
     }
-    val dSt = precomputed.map { case (_, n, t) => (n, t) }.getOrElse {
-      val r = deltaTf.agg(count_distinct(col("doc_id")).as("n"),
-        coalesce(sum(col("tf")), lit(0L)).as("t")).head()
-      (r.getLong(0), r.getLong(1))
-    }
-    val newN = oldSt._1 + dSt._1
-    val newT = oldSt._2 + dSt._2
+    val newN = oldSt._1 + dN
+    val newT = oldSt._2 + dT
     val written = writeVersion(spark, path, cur + 1L, withDf,
       statsRow(spark, newN, newT))
     beforePublish()
     publishBuckets(spark, path, cur + 1L,
       man ++ written.map(_ -> (cur + 1L)))
+    true
   }
 
   // ------------------- streaming LSM delta (the composite-ingest side)
@@ -629,37 +638,32 @@ object LexIndex {
           // corruption no reconcile can undo). Anti-join the fold's
           // rows against the docmap remainder probe (the reconcile's
           // own discipline): one probe per fold, never per trigger.
-          // Materialized once — mergeLocked consumes its input ~4
-          // times (touched-bucket collect, stats head, two writeVersion
-          // subtrees), and each lazy pass would re-read every batch
-          // file and re-run the dedup shuffle inside a live trigger.
+          // Left lazy: mergeLocked materializes its input once, and its
+          // aggregate and version write both read that copy, so the
+          // batch-file scan and the probe join run once inside the
+          // live trigger.
           val rows = readDeltaPaths(spark, dirs)
             .select(col("term"), col("doc_id"), col("tf"))
           val safe = rows.join(
             presentIds(spark, path, rows.select(col("doc_id")).distinct()),
             Seq("doc_id"), "left_anti")
-            .localCheckpoint(true)
           val f = fsOf(spark, new Path(path))
           def markAndBump(): Unit = {
             val mk = new Path(deltaDir(path), s"_folded-${gen + 1L}")
             if (!f.exists(mk)) Lease.tryCreate(f, mk, s"${gen + 1L}\n")
             bumpDeltaGen(f, path, gen + 1L)
           }
-          if (safe.isEmpty)
+          // the marker + bump run BETWEEN the version write and the
+          // manifest publish: a reader pinning inside that two-
+          // metadata-op window sees a brief dip (new empty generation,
+          // old bulk) instead of a dip lasting the whole bucket merge;
+          // a crash before the publish leaves the folded rows invisible
+          // until the reconcile re-lands them from staging (marker live
+          // → fresh stream starts refused, same-checkpoint resumes fine)
+          if (!mergeLocked(spark, path, safe, beforePublish = () => markAndBump()))
             // pure re-delivery (every doc already in bulk): nothing to
             // merge — retiring the dirs alone loses no rows
             markAndBump()
-          else
-            // the marker + bump run BETWEEN the version write and the
-            // manifest publish: a reader pinning inside that two-
-            // metadata-op window sees a brief dip (new empty
-            // generation, old bulk) instead of a dip lasting the whole
-            // bucket merge; a crash before the publish leaves the
-            // folded rows invisible until the reconcile re-lands them
-            // from staging (marker live → fresh stream starts refused,
-            // same-checkpoint resumes fine)
-            mergeLocked(spark, path, safe,
-              beforePublish = () => markAndBump())
           gen + 1L
         }
       // ON A FOLD-MARKED LINEAGE every landing batch is docmap-filtered:
@@ -836,11 +840,11 @@ object LexIndex {
       // long-running stream pays this per trigger, so every saved
       // driver action is a slice off the micro-batch constant.
       // ... and the merge's own driver inputs ride the SAME aggregate:
-      // the touched-bucket set (mergeLocked would otherwise re-collect
-      // it) and the stats delta (n docs = the fence's id count; t =
-      // sum(tf), since t_total is the sum of per-doc dl = per-doc
-      // sum(tf)) — two fewer jobs per trigger on a path a continuous
-      // stream pays forever.
+      // the touched-bucket set and the stats delta (n docs = the
+      // fence's id count; t = sum(tf), since t_total is the sum of
+      // per-doc dl = per-doc sum(tf)), which mergeLocked would
+      // otherwise get by materializing the tf and aggregating it — a
+      // path a continuous stream pays forever.
       val shape = tf.agg(count_distinct(col("doc_id")).as("n"),
           collect_set(tb(col("term"))).as("tbs"),
           coalesce(sum(col("tf")), lit(0L)).as("t")).collect().head

@@ -622,11 +622,16 @@ object DailyDriver {
     * Step cost is therefore flat in CORPUS size at fixed delta: the
     * only corpus-proportional touch left is the column-pruned scan
     * that finds the affected components' members.
+    *
+    * `newDocs` is read once: its (doc_id, text) columns are
+    * materialized under the lease, before any probe, and every half
+    * reads that copy.
     * @return the updated decision table (read back from storage) */
   def step(spark: SparkSession, newDocs: DataFrame, benchmark: DataFrame,
            dir: String, cfg: Curation.Config = Curation.Config(),
            embeddings: Option[DataFrame] = None): DataFrame =
-    stepImpl(spark, newDocs, benchmark, dir, cfg, embeddings, None)
+    stepImpl(spark, newDocs.select(col("doc_id"), col("text")).localCheckpoint(true),
+      benchmark, dir, cfg, embeddings, None)
 
   /** What the stream's own records say ALREADY LANDED — the day-end
     * reconcile hands this to [[stepImpl]] so the index halves probe
@@ -646,16 +651,27 @@ object DailyDriver {
     landed.map(l => rows.join(l.select(col("doc_id")).distinct(),
       Seq("doc_id"), "left_anti")).getOrElse(rows)
 
-  private def stepImpl(spark: SparkSession, newDocs: DataFrame,
+  /** The step body shared by [[step]] and [[stepStreamReconcile]].
+    * `arrivals` is the day's MATERIALIZED (doc_id, text) relation,
+    * evaluated once under the lease: every probe, the curation and the
+    * candidate set read that one copy, so the caller's relation is
+    * never re-derived per half. [[step]] passes the materialization of
+    * its input; the reconcile passes its already-materialized staged
+    * day. Each half runs under its own [[graft.obs.scope]] name
+    * (`step.fps`, `step.curate`, `step.sig`, `step.lex`, `step.vec`,
+    * `step.pq`, `step.publish`). */
+  private def stepImpl(spark: SparkSession, arrivals: => DataFrame,
                        benchmark: DataFrame, dir: String,
                        cfg: Curation.Config, embeddings: Option[DataFrame],
                        streamed: Option[StreamCensus]): DataFrame =
    Lease.withLease(spark, dir, "step") {
+    import graft.obs.scope
     // a flat decision table (repaired unpartitioned replacement) must
     // be re-founded before this step's partition publish renames
     // batch= dirs next to root-level files
     refoundPartitioned(spark, openDecisionsBatched(spark, dir),
       decisionsDir(dir))
+    val newDocs = arrivals
     val prevB = openDecisionsBatched(spark, dir)
     val prev = prevB.drop("batch")
     val prevIndex = openSigIndex(spark, dir)
@@ -783,8 +799,6 @@ object DailyDriver {
             }
           }
       }
-      landUnlanded(VecIndex, vdir, _.vecLanded)(
-        VecIndex.append(_, "doc_id", "embedding", cents, vdir))
       // the code table gets the SAME day's candidates under the SAME
       // cosine assignment (assignFold is deterministic given (rows,
       // cents), so the two stores' cell layouts stay identical without
@@ -799,15 +813,23 @@ object DailyDriver {
       // while desynced, and the pending sourced refresh re-encodes ALL
       // current candidates (these arrivals included) from the decision
       // table, so nothing is lost.
+      //
+      // The two stores are separate directories, each with its own
+      // lease, census and replay probe: the vec append runs beside the
+      // PQ alignment check and append (init's vec ∥ PQ shape).
       val pqdir = pqIndexDir(dir)
-      if (PqIndex.currentVersion(spark, pqdir) > 0L &&
-          pqCoarseAligned(spark, pqdir, collectCoarse(cents)))
-        // same census discipline as the vec half (see above)
-        landUnlanded(PqIndex, pqdir, _.pqLanded)(rows =>
-          PqIndex.appendAssigned(
-            VecIndex.assignFold(rows, "doc_id", "embedding", cents)
-              .select(col("doc_id"), col("embedding"), col("cid")),
-            "doc_id", "embedding", pqdir))
+      Par.both(spark)(
+        scope("step.vec")(landUnlanded(VecIndex, vdir, _.vecLanded)(
+          VecIndex.append(_, "doc_id", "embedding", cents, vdir))),
+        scope("step.pq")(
+          if (PqIndex.currentVersion(spark, pqdir) > 0L &&
+              pqCoarseAligned(spark, pqdir, collectCoarse(cents)))
+            // same census discipline as the vec half (see above)
+            landUnlanded(PqIndex, pqdir, _.pqLanded)(rows =>
+              PqIndex.appendAssigned(
+                VecIndex.assignFold(rows, "doc_id", "embedding", cents)
+                  .select(col("doc_id"), col("embedding"), col("cid")),
+                "doc_id", "embedding", pqdir))))
     }
     // The store halves are independent directories, each with its own
     // lease and replay guard, so they run side by side (Par): the fps
@@ -815,27 +837,35 @@ object DailyDriver {
     // the sig, lex and vec+PQ appends need the arrivals' candidacy and
     // run beside each other once it exists. Every fork joins before the
     // publish below.
-    val (_, delta) = Par.both(spark)(fpsHalf(), {
-      // RETRY guard, decisions half: the partition publish is this
-      // step's COMMIT POINT (it runs last) — a replayed step that finds
-      // any arrival already decided is re-running after a crash that
-      // happened AT OR AFTER the publish, so every half is landed and
-      // the whole pass is probe-cost. Recomputing the delta against a
-      // prev that already contains the arrivals would also violate
-      // curateIncremental's disjointness contract.
-      val decLanded = !prevB.join(deltaIds, Seq("doc_id"), "left_semi").isEmpty
-      // eager (localCheckpoint inside): fully materialized before any
-      // index half touches its directory
-      val delta =
-        if (decLanded) None
-        else Some(Curation.curateIncrementalDelta(
-          prev, prevIndex, newDocs, benchmark, cfg))
-      // the arrivals' own decisions (either just computed or already
-      // persisted) gate which of them are CANDIDATES for the index halves
-      val newCand = candidates(newDocs, delta.getOrElse(prevB)
-        .join(deltaIds, Seq("doc_id"), "left_semi"))
+    val (_, delta) = Par.both(spark)(scope("step.fps")(fpsHalf()), {
+      val (delta, newCand) = scope("step.curate") {
+        // RETRY guard, decisions half: the partition publish is this
+        // step's COMMIT POINT (it runs last) — a replayed step that finds
+        // any arrival already decided is re-running after a crash that
+        // happened AT OR AFTER the publish, so every half is landed and
+        // the whole pass is probe-cost. Recomputing the delta against a
+        // prev that already contains the arrivals would also violate
+        // curateIncremental's disjointness contract.
+        val decLanded = !prevB.join(deltaIds, Seq("doc_id"), "left_semi").isEmpty
+        // eager (localCheckpoint inside): fully materialized before any
+        // index half touches its directory
+        val delta =
+          if (decLanded) None
+          else Some(Curation.curateIncrementalDelta(
+            prev, prevIndex, newDocs, benchmark, cfg))
+        // the arrivals' own decisions (either just computed or already
+        // persisted) gate which of them are CANDIDATES for the index
+        // halves; materialized once, so the sig, lex, vec and PQ halves
+        // read one copy instead of each re-joining arrivals with
+        // decisions
+        val newCand = candidates(newDocs, delta.getOrElse(prevB)
+          .join(deltaIds, Seq("doc_id"), "left_semi")).localCheckpoint(true)
+        (delta, newCand)
+      }
       Par.forkJoin(spark)(
-        () => vecHalf(newCand), () => sigHalf(newCand), () => lexHalf(newCand))
+        () => vecHalf(newCand),
+        () => scope("step.sig")(sigHalf(newCand)),
+        () => scope("step.lex")(lexHalf(newCand)))
       delta
     })
     // the delta-grain decision publish — the step's commit point. Each
@@ -843,7 +873,7 @@ object DailyDriver {
     // arrivals get this step's. The touched-batch census is bounded by
     // the touched components' distinct arrival days, collected to
     // drive partition pruning on the staged read.
-    delta.foreach { d =>
+    scope("step.publish")(delta.foreach { d =>
       val dB = d.join(prevB.select(col("doc_id"), col("batch")),
           Seq("doc_id"), "left")
         .withColumn("batch", coalesce(col("batch"), lit(minId)))
@@ -857,7 +887,7 @@ object DailyDriver {
       PartitionSwap.swap(spark, decisionsDir(dir)) { stage =>
         staged.write.partitionBy("batch").parquet(stage)
       }
-    }
+    })
     openDecisions(spark, dir)
   }
 
@@ -1386,7 +1416,8 @@ object DailyDriver {
         Seq("doc_id"), "left_semi")
       .select(col("batch")).distinct().collect().map(_.getLong(0))
     if (touched.nonEmpty) {
-      val content = prevB.filter(col("batch").isin(touched.toSeq: _*))
+      val content = prevB.filter(
+        col("batch").isin(ArraySeq.unsafeWrapArray(touched): _*))
         .join(vIds, Seq("doc_id"), "left_anti")
         .join(redecided.select(col("doc_id")), Seq("doc_id"), "left_anti")
         .unionByName(redecided
@@ -1395,7 +1426,8 @@ object DailyDriver {
       val live = content.select(col("batch")).distinct()
         .collect().map(_.getLong(0)).toSet
       val untouched = prevB.select(col("batch")).distinct()
-        .filter(!col("batch").isin(touched.toSeq: _*)).limit(1).count() > 0L
+        .filter(!col("batch").isin(ArraySeq.unsafeWrapArray(touched): _*))
+        .limit(1).count() > 0L
       // a takedown that would empty the WHOLE decision table is a
       // reset, not a retraction (an empty partitioned table cannot
       // carry its schema, wedging every later open/step) — refuse

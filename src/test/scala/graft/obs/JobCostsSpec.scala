@@ -85,4 +85,36 @@ class JobCostsSpec extends SparkSpecBase {
       assert(j.shuffleWriteBytes > 0 && j.shuffleReadBytes == j.shuffleWriteBytes, s"run $i: $j")
     }
   }
+
+  test("a scope names every job of its body, forked ones included, and restores the caller's") {
+    import org.apache.spark.sql.functions.broadcast
+    val sc = spark.sparkContext
+    val key = "spark.job.description"
+    sc.setJobDescription("caller")
+    try {
+      val (_, jobs) = JobCosts.during(spark) {
+        scope("spec.outer") {
+          graft.pipelines.Par.forkJoin(spark)(
+            () => sc.parallelize(1 to 3, 3).count(),
+            () => scope("spec.inner")(spark.range(1000)
+              .join(broadcast(spark.range(10).toDF("id")), "id").collect().length.toLong),
+            () => spark.range(100).selectExpr("id % 7 AS k").groupBy("k").count().count())
+        }
+      }
+      assert(jobs.size >= 4, jobs)
+      assert(jobs.exists(_.scope.exists(_.startsWith("BroadcastExchange"))), jobs)
+      assert(jobs.forall(j => j.description.contains("spec.outer") ||
+        j.description.contains("spec.inner")), jobs)
+      assert(jobs.exists(_.description.contains("spec.inner")), jobs)
+      assert(sc.getLocalProperty(key) == "caller")
+
+      val thrown = intercept[IllegalStateException](scope("spec.failing") {
+        sc.parallelize(1 to 2).count()
+        throw new IllegalStateException("body failed")
+      })
+      assert(thrown.getMessage == "body failed")
+      assert(sc.getLocalProperty(key) == "caller")
+    } finally sc.setJobDescription(null)
+    assert(sc.getLocalProperty(key) == null)
+  }
 }

@@ -69,6 +69,23 @@ class LexIndexSpec extends SparkSpecBase {
       s"stats diverge: ${statsRows(incPath).toSeq} vs ${statsRows(fullPath).toSeq}")
   }
 
+  test("merge reads its tf input once per row") {
+    val docs = docsAt("/root/testdata/sf0.001")
+    val p = tempDir("lexmerge_once")
+    LexIndex.build(UnigramLm.termFreq(docs.filter(col("doc_id") % 3 =!= 0), "doc_id", "text"), p)
+    val delta = UnigramLm.termFreq(docs.filter(col("doc_id") % 3 === 0), "doc_id", "text")
+      .localCheckpoint()
+    // a deterministic pass-through projection that counts the rows it
+    // sees: every evaluation of the merge's input adds one per tf row.
+    // It wraps `tf`, the column no null-key filter reads (a filter over
+    // a wrapped key would evaluate the UDF once more per row).
+    val reads = spark.sparkContext.longAccumulator("lex merge tf reads")
+    val counted = udf { (tf: Long) => reads.add(1L); tf }
+    LexIndex.merge(spark, p, delta.withColumn("tf", counted(col("tf"))))
+    val rows = delta.count()
+    assert(reads.sum == rows, s"merge read ${reads.sum} tf rows for a $rows-row delta")
+  }
+
   test("streaming ingest equals the batch build; a replayed batch is a landed no-op") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

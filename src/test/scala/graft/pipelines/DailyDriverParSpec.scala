@@ -28,6 +28,9 @@ class DailyDriverParSpec extends SparkSpecBase {
   private def ids(df: DataFrame): Seq[Long] =
     df.select(col("doc_id")).collect().map(_.getLong(0)).sorted.toSeq
 
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
   test("an init whose lexical half fails throws after the other halves finish; a re-init lands day 0") {
     val docs = DriverParquet.read(spark).load(s"$sf/documents.parquet")
       .filter(col("doc_id") < 160).select(col("doc_id"), col("text"))
@@ -132,5 +135,56 @@ class DailyDriverParSpec extends SparkSpecBase {
     assert(ids(DailyDriver.openSigIndex(spark, dir)) ==
       ids(graft.streaming.StreamOps.signatureIndex(cand)),
       "signature index double- or under-appended")
+  }
+
+  test("a step whose PQ half fails throws after the vec append finishes; a replay lands the day") {
+    val docs = DriverParquet.read(spark).load(s"$sf/documents.parquet")
+      .filter(col("doc_id") < 240).select(col("doc_id"), col("text"))
+    val emb = DriverParquet.read(spark).load(s"$sf/embeddings.parquet")
+      .select(col("vec_id").as("doc_id"), col("embedding"))
+    val bench = docs.filter(col("doc_id") % 50 === 0)
+    val day0 = docs.filter(col("doc_id") < 160)
+    val day1 = docs.filter(col("doc_id") >= 160)
+    val dir = tempDir("daily-par-pq")
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    DailyDriver.init(spark, day0, bench, dir, cfg, Some(emb))
+    val decBefore = canon(DailyDriver.openDecisions(spark, dir))
+    val vdir = DailyDriver.vecIndexDir(dir)
+    val pdir = DailyDriver.pqIndexDir(dir)
+    val vecBefore = VecIndex.open(spark, vdir).count()
+
+    // a live writer holds the PQ code table: the step's PQ append fails
+    // fast, while the vec append beside it has work to do
+    val holder = Lease.acquire(spark, pdir, "another-writer")
+    val (thrown, jobs) = JobCosts.during(spark) {
+      intercept[Lease.LeaseHeldException](
+        DailyDriver.step(spark, day1, bench, dir, cfg, Some(emb)))
+    }
+    assert(thrown.getMessage.contains(pdir), thrown)
+    assert(jobs.nonEmpty && jobs.forall(_.seconds.isDefined),
+      s"a job was still running when step threw: ${jobs.filter(_.seconds.isEmpty)}")
+    Seq(dir, vdir).foreach { d =>
+      assert(!fs.exists(new Path(s"$d/__lease")), s"lease of $d still held after step threw")
+    }
+    assert(VecIndex.open(spark, vdir).count() > vecBefore,
+      "the vector half had not landed when step threw")
+    assert(canon(DailyDriver.openDecisions(spark, dir)) == decBefore,
+      "the failed step changed the decision table")
+    Lease.release(spark, holder)
+    assert(!fs.exists(new Path(s"$pdir/__lease")), "the failed step left a PQ lease behind")
+
+    // the replay skips the landed vec append and lands the PQ one
+    val got = DailyDriver.step(spark, day1, bench, dir, cfg, Some(emb))
+    assert(canon(got) == canon(Curation.curate(docs, bench, cfg)),
+      "replayed step diverged from the full rerun")
+    val fresh = tempDir("daily-par-pq-fresh")
+    DailyDriver.init(spark, day0, bench, fresh, cfg, Some(emb))
+    DailyDriver.step(spark, day1, bench, fresh, cfg, Some(emb))
+    assert(rows(VecIndex.open(spark, vdir)) ==
+      rows(VecIndex.open(spark, DailyDriver.vecIndexDir(fresh))),
+      "vector index diverged from a fresh build of the same days")
+    assert(rows(PqIndex.open(spark, pdir)) ==
+      rows(PqIndex.open(spark, DailyDriver.pqIndexDir(fresh))),
+      "PQ code table diverged from a fresh build of the same days")
   }
 }
